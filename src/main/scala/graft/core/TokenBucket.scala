@@ -1,9 +1,12 @@
 package graft.core
 
 /** Token-bucket rate limiter guarding metric creation (reference:
-  * rurouni/utils.py:55-104; wired at rurouni/cache.py:119-121 with
-  * capacity = fill rate = MAX_CREATES_PER_MINUTE/60). The clock is
-  * injectable so tests are deterministic.
+  * rurouni/utils.py:55-104). `capacity` is in tokens and `fillRate` in
+  * tokens per second; the reference wires it at rurouni/cache.py:119-121
+  * with capacity = MAX_CREATES_PER_MINUTE tokens, refilled at
+  * MAX_CREATES_PER_MINUTE / 60 tokens per second (see
+  * `graft.streaming.Daemon.cliCatalog`). The clock is injectable so tests
+  * are deterministic.
   */
 final class TokenBucket(val capacity: Double, val fillRate: Double,
                         clock: () => Double = () => System.nanoTime() / 1e9) {

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   *
   * File-size posture: the catalog is tiny (one row per metric) and updated
   * by appending only NEW metrics, so it stays a handful of files; reads
-  * broadcast.
+  * scan the cached frame below.
   */
 final class Catalog(val root: String, val schemas: StorageSchemas,
                     val numInstances: Int = 1, val instance: Int = 0,
@@ -35,15 +35,6 @@ final class Catalog(val root: String, val schemas: StorageSchemas,
     */
   @volatile var creates: Long = 0L
   @volatile var droppedCreates: Long = 0L
-
-  /** Above this estate size, catalog-derived frames are no longer
-    * broadcast-hinted — the planner picks (shuffle at 3M+ metrics instead
-    * of shipping a 100+ MB hash relation per query). Configurable because
-    * the right cutover depends on executor memory.
-    */
-  val broadcastMaxRows: Long =
-    spark.conf.getOption("spark.graft.catalog.broadcastMaxRows")
-      .map(_.toLong).getOrElse(1000000L)
 
   private val catalogSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("metric", org.apache.spark.sql.types.StringType),
@@ -202,14 +193,6 @@ final class Catalog(val root: String, val schemas: StorageSchemas,
 
   /** Estate size (cached with the frame; free after first call). */
   def metricCount(): Long = synchronized { cachedMetrics()._2 }
-
-  /** Broadcast-hint a catalog-derived frame (row count ≤ the estate) only
-    * while the estate is below [[broadcastMaxRows]]; above it the planner
-    * chooses — at the reference's 3M-metric estate a forced broadcast is a
-    * ~100 MB driver build per query.
-    */
-  def hintSmall(df: DataFrame): DataFrame =
-    if (metricCount() <= broadcastMaxRows) broadcast(df) else df
 
   /** First-match-wins schema assignment as a plan column (chained
     * prefix-anchored rlike — `Regex.lookingAt` == `^(?:pattern)` find), so

@@ -181,6 +181,7 @@ final class MetricStore(val root: String, val schema: StorageSchema,
       // slow staging write above stays outside the lock, shielded by the
       // activeSwaps registration instead.
       MetricStore.swapMonitor(target).synchronized {
+        MetricStore.bumpSwapGeneration(target)
         val fs = hadoopFs(target)
         val old = new Path(s"$target.__old")
         fs.mkdirs(new Path(target))
@@ -214,6 +215,7 @@ final class MetricStore(val root: String, val schema: StorageSchema,
     val fs = hadoopFs(target)
     val old = new Path(s"$target.__old")
     if (fs.exists(old)) {
+      MetricStore.bumpSwapGeneration(target)
       fs.listStatus(old).foreach { st =>
         val name = st.getPath.getName
         if (name.startsWith("pday=") && !fs.exists(new Path(s"$target/$name"))) {
@@ -247,7 +249,7 @@ final class MetricStore(val root: String, val schema: StorageSchema,
   /** Raw level rows (may contain superseded duplicates), pruned to a time
     * range (partition pruning on pday + row-group pruning on ts).
     */
-  private def readLevelRaw(i: Int, fromTime: Long, untilTime: Long): DataFrame = {
+  private[graft] def readLevelRaw(i: Int, fromTime: Long, untilTime: Long): DataFrame = {
     recoverSwap(levelPath(i)) // cheap no-op unless a swap died mid-flight
     if (!hasData(levelPath(i)))
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], levelSchema)
@@ -389,7 +391,13 @@ final class MetricStore(val root: String, val schema: StorageSchema,
     * scan size — reference: kenshin/storage.py:617-694), read that level
     * pruned, gap-fill against the step spine. Returns None when the range
     * is entirely outside retention. Output: (metric, ts, value) step-aligned,
-    * nulls in gaps.
+    * nulls in gaps, ordered by metric then ts.
+    *
+    * `hot` adds raw hot-cache rows `(metric, ts, value, arrival)` at any
+    * finer step: they roll up to the level's step with the schema's
+    * aggregation method and win every slot they touch
+    * ([[graft.streaming.HotCache.fetchMerged]]). Both reads are one
+    * [[TimeSeries.mergeSlots]] pass.
     *
     * With a catalog attached, the gap-fill spine comes from the catalog
     * (the reference resolves series through its metric index,
@@ -397,24 +405,21 @@ final class MetricStore(val root: String, val schema: StorageSchema,
     * registered-but-silent series fetch as all-null (empty-metric fetch,
     * tests/test_storage.py:127-133).
     */
-  def fetch(metricFilter: Option[String], fromTime: Long, untilTime: Long, now: Long): Option[(Int, DataFrame)] =
+  def fetch(metricFilter: Option[String], fromTime: Long, untilTime: Long, now: Long,
+            hot: Option[DataFrame] = None): Option[(Int, DataFrame)] =
     TimeSeries.clampWindow(fromTime, untilTime, now, schema.maxRetention).map { case (from, until) =>
       val level = TimeSeries.selectArchive(archives, from, now)
       val step = archives(level).secondsPerPoint
-      val base = readLevel(level, TimeSeries.roundup(from, step), TimeSeries.roundup(until, step))
-      val filtered = metricFilter.fold(base)(m => base.where(col("metric") === m))
-      val spine = catalog.map { c =>
-        // only THIS store's schema: the catalog is shared across stores,
-        // and an unfiltered spine would gap-fill phantom all-null series
-        // for metrics that belong to other schemas
-        val all = c.metrics().where(col("schema_name") === schema.name)
-          .select(col("metric"))
-        // single-series fetches always broadcast (1-row spine); unfiltered
-        // spines broadcast only below the estate threshold (Catalog doc)
-        metricFilter.fold(c.hintSmall(all))(m =>
-          broadcast(all.where(col("metric") === m)))
-      }
-      (level, TimeSeries.gapFill(filtered, from, until, step, spine).orderBy("metric", "ts"))
+      val (lo, hi) = (TimeSeries.roundup(from, step), TimeSeries.roundup(until, step))
+      def only(df: DataFrame): DataFrame = metricFilter.fold(df)(m => df.where(col("metric") === m))
+      // only THIS store's schema: the catalog is shared across stores, and
+      // an unfiltered spine would gap-fill phantom all-null series for
+      // metrics that belong to other schemas
+      val spine = catalog.map(c => only(
+        c.metrics().where(col("schema_name") === schema.name).select(col("metric"))))
+      val merged = TimeSeries.mergeSlots(hot.map(only), only(readLevelRaw(level, lo, hi)),
+        spine, lo, hi, step, schema.aggregationMethod)
+      (level, merged.orderBy("metric", "ts"))
     }
 
   // ---- retention / maintenance -----------------------------------------
@@ -547,6 +552,18 @@ object MetricStore {
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
   private[storage] def swapMonitor(target: String): Object =
     swapMonitors.computeIfAbsent(target, _ => new Object)
+
+  /** Per-table swap generation: bumped under the table's swap monitor
+    * BEFORE the first rename of a swap (or of a crash recovery), so a
+    * snapshot listed under the same monitor can tell afterwards whether
+    * any of its files may have moved ([[SnapshotRead.stale]]).
+    */
+  private val swapGenerations =
+    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
+  private def generationOf(target: String): java.util.concurrent.atomic.AtomicLong =
+    swapGenerations.computeIfAbsent(target, _ => new java.util.concurrent.atomic.AtomicLong())
+  private[storage] def swapGeneration(target: String): Long = generationOf(target).get()
+  private def bumpSwapGeneration(target: String): Unit = { generationOf(target).incrementAndGet(); () }
 
   /** Tables with a swap IN FLIGHT in this JVM (staging write + rename
     * window). A reader-side recoverSwap probe must no-op for these: its

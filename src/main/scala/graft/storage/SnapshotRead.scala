@@ -21,11 +21,12 @@ import org.apache.spark.sql.types.StructType
   *    never listed), with the base-path option preserving the pday
   *    partition column, the same pinning the catalog cache uses;
   *  - supplies the schema up front, so no footer read can race a swap;
-  *  - sets `ignoreMissingFiles`, so a file the drain swapped away after
-  *    listing is skipped — the affected slots were just flushed into the
-  *    level tables and are served by the next request (the reference has
-  *    the same one-drain staleness window between its cache query and the
-  *    whisper read);
+  *  - lists under the table's swap monitor and records the table's swap
+  *    generation in the scan's options, so [[stale]] can tell after a run
+  *    whether a swap moved any listed file, and [[collect]] re-plans such
+  *    a read. A frame planned before a swap and run after it would
+  *    otherwise skip the swapped day's files (`ignoreMissingFiles`, set
+  *    for a drain's deletes) and gap-fill the whole day as nulls;
   *  - retries a listing that raced a rename, and treats a vanished
   *    directory as empty (a table mid-creation serves as empty, exactly
   *    like the hasData guard).
@@ -35,6 +36,12 @@ import org.apache.spark.sql.types.StructType
   * read is already safe and the extra listing would be waste.
   */
 object SnapshotRead {
+
+  /** Reader option carrying `<swap generation>\t<table dir>` of a snapshot. */
+  private val GenerationOption = "graftsnapshot"
+
+  /** Plans a serving read may take before [[collect]] gives up. */
+  private val MaxPlans = 4
 
   private def visible(name: String): Boolean =
     !name.startsWith("_") && !name.startsWith(".")
@@ -70,10 +77,13 @@ object SnapshotRead {
       }
       Array.empty // unreachable
     }
-    val top = ls(new Path(dir))
-    val files = top.filterNot(_.isDirectory).map(_.getPath.toString) ++
-      top.filter(s => s.isDirectory && s.getPath.getName.contains("="))
-        .flatMap(d => ls(d.getPath).filterNot(_.isDirectory).map(_.getPath.toString))
+    val (files, generation) = MetricStore.swapMonitor(dir).synchronized {
+      val top = ls(new Path(dir))
+      (top.filterNot(_.isDirectory).map(_.getPath.toString) ++
+        top.filter(s => s.isDirectory && s.getPath.getName.contains("="))
+          .flatMap(d => ls(d.getPath).filterNot(_.isDirectory).map(_.getPath.toString)),
+        MetricStore.swapGeneration(dir))
+    }
     if (files.isEmpty)
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
@@ -81,7 +91,47 @@ object SnapshotRead {
       spark.read
         .option("basePath", dir)
         .option("ignoreMissingFiles", "true")
+        .option(GenerationOption, s"$generation\t$dir")
         .schema(schema)
         .parquet(files.toIndexedSeq: _*)
+  }
+
+  /** True when a table `df` snapshots has been swapped since it was listed:
+    * a run of `df` that overlapped the swap may have skipped moved files.
+    * Driver-side only (a walk of the analyzed plan), no job.
+    */
+  def stale(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.exists {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+        l.relation match {
+          case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+            h.options.get(GenerationOption).exists { v =>
+              val Array(generation, dir) = v.split("\t", 2)
+              MetricStore.swapGeneration(dir) != generation.toLong
+            }
+          case _ => false
+        }
+      case _ => false
+    }
+
+  /** The serving collect: run `first`, and while a swap ran between a
+    * listing and the end of the run, run a fresh plan from `replan` — so
+    * every swapped day reads wholly as before or wholly as after the swap.
+    * A run during which no swap ran costs no extra job. Fails after
+    * [[MaxPlans]] plans rather than serve a read with a day missing.
+    */
+  def collect(first: DataFrame)(replan: => DataFrame): Array[org.apache.spark.sql.Row] = {
+    var df = first
+    var plans = 1
+    while (true) {
+      val rows = df.collect()
+      if (!stale(df)) return rows
+      if (plans >= MaxPlans)
+        throw new IllegalStateException(
+          s"serving read overlapped a partition swap on each of $plans plans")
+      df = replan
+      plans += 1
+    }
+    Array.empty // unreachable
   }
 }

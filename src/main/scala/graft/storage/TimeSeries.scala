@@ -38,16 +38,6 @@ object TimeSeries {
       .select(col("metric"), col("aligned_ts").as("ts"), col("value"), arrival.as("arrival"))
   }
 
-  /** Downsample one level into the next coarser level: tumbling window of
-    * `stepSeconds`, one of the five closed aggregation methods. Nulls are
-    * ignored natively (all-null group -> null), matching filter_values
-    * (reference: kenshin/storage.py:588-615). Single shuffle with map-side
-    * partial aggregation.
-    */
-  def rollup(df: DataFrame, stepSeconds: Int, agg: AggMethod): DataFrame =
-    df.groupBy(col("metric"), alignTs(col("ts"), stepSeconds).as("ts"))
-      .agg(agg.expr(col("value"), col("ts")).as("value"))
-
   /** Fetch-window clamp (reference: kenshin/storage.py:626-637):
     * reject inverted ranges, clamp to [now - maxRetention, now]; None when
     * the requested range is entirely outside the retained window.
@@ -86,26 +76,57 @@ object TimeSeries {
     df.withColumn("level", level)
   }
 
-  /** Gap-fill a fetched range against a dense time spine: one row per
-    * (metric, slot) in [from, until) at `step`, null value where no data
-    * (reference fetch pre-allocates null points: kenshin/storage.py:650-693).
-    * The spine (metrics x slots) is tiny relative to data and broadcast.
+  /** The merged read in one shuffle: hot-cache rows over level rows,
+    * gap-filled against a dense spine of one row per (series, slot) in
+    * [from, until) at `step` (the reference pre-allocates null points,
+    * kenshin/storage.py:650-693, and stitches its cache over the archive,
+    * rurouni/cache.py:161-169). `hot` and `level` are raw rows
+    * `(metric, ts, value, arrival)`, possibly with superseded duplicates;
+    * hot rows may sit at a finer step than `step`.
     *
-    * `spineMetrics` (a 1-column `metric` frame, normally the catalog table)
-    * supplies the series list; without it the spine is derived from the
-    * fetched rows themselves — fine for tests, but a fetch at scale should
-    * never scan data to learn metric names, and silent series would vanish
-    * instead of fetching as all-null.
+    * One union of the three sources, each row tagged with its source, is
+    * hash-partitioned once on `metric`; both aggregations below group on
+    * keys that start with `metric`, so neither adds an exchange:
+    *  - last write wins per `(metric, ts, source)` (as [[lwwMerge]]);
+    *  - per `(metric, slot)`: the schema's `agg` over the hot values, the
+    *    hot value wherever the slot has a hot row (hot wins, even when it
+    *    rolls up to null), else the level value; only slots with a spine
+    *    row are kept.
+    *
+    * `spine` (a 1-column `metric` frame, normally the catalog) names the
+    * series; without it the series are the ones with a row in the window —
+    * fine for tests, but a read at scale should never scan data to learn
+    * metric names, and silent series would vanish instead of reading as
+    * all-null.
     */
-  def gapFill(df: DataFrame, fromTime: Long, untilTime: Long, stepSeconds: Int,
-              spineMetrics: Option[DataFrame] = None): DataFrame = {
-    val from = roundup(fromTime, stepSeconds)
-    val until = roundup(untilTime, stepSeconds)
-    val spine = spineMetrics.getOrElse(df.select(col("metric")).distinct())
-      .select(col("metric"),
-        explode(sequence(lit(from), lit(until - stepSeconds), lit(stepSeconds.toLong))).as("ts"))
-    spine.join(df, Seq("metric", "ts"), "left")
-      .select(col("metric"), col("ts"), col("value"))
+  def mergeSlots(hot: Option[DataFrame], level: DataFrame, spine: Option[DataFrame],
+                 from: Long, until: Long, step: Int, agg: AggMethod): DataFrame = {
+    val (fromHot, fromLevel, fromSpine) = (0, 1, 2)
+    def tagged(df: DataFrame, source: Int): DataFrame =
+      df.where(col("ts") >= from && col("ts") < until)
+        .select(col("metric"), col("ts"), col("value"), col("arrival"), lit(source).as("src"))
+    val rows = hot.fold(tagged(level, fromLevel))(h =>
+      tagged(h, fromHot).unionByName(tagged(level, fromLevel)))
+    val slotTs =
+      if (until > from) sequence(lit(from), lit(until - step), lit(step.toLong))
+      else typedLit(Seq.empty[Long])
+    val slots = spine.getOrElse(rows.select(col("metric")).distinct())
+      .select(col("metric"), explode(slotTs).as("ts"), lit(null).cast("double").as("value"),
+        lit(null).cast("long").as("arrival"), lit(fromSpine).as("src"))
+    val isHot = col("src") === fromHot
+    rows.unionByName(slots)
+      .repartition(col("metric"))
+      .groupBy(col("metric"), col("ts"), col("src"))
+      .agg(max_by(col("value"), struct(col("arrival"), col("value"))).as("value"))
+      .groupBy(col("metric"), alignTs(col("ts"), step).as("ts"))
+      .agg(
+        max(col("src") === fromSpine).as("spine"),
+        max(isHot).as("hot"),
+        agg.expr(when(isHot, col("value")), col("ts")).as("hot_value"),
+        max(when(col("src") === fromLevel, col("value"))).as("level_value"))
+      .where(col("spine"))
+      .select(col("metric"), col("ts"),
+        when(col("hot"), col("hot_value")).otherwise(col("level_value")).as("value"))
   }
 
   /** Ceil to a multiple of base (reference: kenshin/utils.py:32-44, used for

@@ -1,6 +1,8 @@
 package graft.streaming
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
+import graft.serving.TargetEval
+import graft.storage.SnapshotRead
 import java.net.InetSocketAddress
 import org.apache.spark.sql.functions._
 
@@ -172,11 +174,13 @@ final class CacheQueryServer(caches: Seq[HotCache], port: Int = 0,
     val from = timeParam(p, "from", now)
     val until = timeParam(p, "until", now)
     val hot = cacheFor(metric)
-    hot.fetchMerged(Some(metric), from, until, now) match {
+    def plan() = hot.fetchMerged(Some(metric), from, until, now)
+    plan() match {
       case None => (200, jsonSeries(metric, 0, Array.empty))
       case Some((level, df)) =>
         val step = hot.store.archives(level).secondsPerPoint
-        val rows = df.select(col("ts"), col("value")).collect()
+        def series(d: org.apache.spark.sql.DataFrame) = d.select(col("ts"), col("value"))
+        val rows = SnapshotRead.collect(series(df))(series(plan().get._2))
           .map(r => (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getDouble(1))))
         (200, jsonSeries(metric, step, rows))
     }
@@ -328,11 +332,17 @@ final class CacheQueryServer(caches: Seq[HotCache], port: Int = 0,
   /** Graphite render-API analog: parse each `target` parameter (the API
     * accepts any number per request, like graphite-web) as a function
     * expression (serving/TargetLang) and evaluate it (serving/TargetEval)
-    * over the merged hot ∪ historical fetch of every schema — the full
-    * graphite-web `/render?target=scale(sumSeries(a.*.b),0.5)&target=...
-    * &from=..&until=..` path in one process. Response: `[{"target":"name",
+    * over the merged hot ∪ historical fetch — the full graphite-web
+    * `/render?target=scale(sumSeries(a.*.b),0.5)&target=...&from=..&until=..`
+    * path in one process. Response: `[{"target":"name",
     * "datapoints":[[ts,v|null],...]},...]` in request target order, each
     * target's series ordered by name then ts.
+    *
+    * Each fetched path reads only the schemas that hold a matching series
+    * (see [[cachesFor]]), each through one [[HotCache.fetchMerged]] plan;
+    * each target runs through [[SnapshotRead.collect]], so a flush that
+    * swaps a table mid-render re-plans the target instead of serving the
+    * swapped day as nulls.
     *
     * Bounded like /fetch: each schema's frame is clamped + archive-
     * selected before evaluation, and `maxRows` (default 100k slots — a
@@ -351,32 +361,34 @@ final class CacheQueryServer(caches: Seq[HotCache], port: Int = 0,
     // parse every target up front: one malformed target fails the whole
     // request as a 400 before any evaluation work starts
     val exprs = targets.map(graft.serving.TargetLang.parse)
-    val spark = caches.head.hotView().sparkSession
+    val spark = caches.head.spark
     val empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("metric", org.apache.spark.sql.types.StringType),
         org.apache.spark.sql.types.StructField("ts", org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("value", org.apache.spark.sql.types.DoubleType))))
-    def merged(metricFilter: Option[String],
+    def merged(hots: Seq[HotCache], metricFilter: Option[String],
                extraSec: Long): org.apache.spark.sql.DataFrame = {
       val frames =
-        caches.flatMap(_.fetchMerged(metricFilter, from - extraSec, until, now).map(_._2))
+        hots.flatMap(_.fetchMerged(metricFilter, from - extraSec, until, now).map(_._2))
       if (frames.isEmpty) empty
       else frames.map(_.select(col("metric"), col("ts"), col("value")))
         .reduce(_ unionByName _)
     }
-    // one merged hot ∪ historical frame shared by every wildcard glob in
-    // the target (a 3-path target must not rebuild the fetch 3×), cached
-    // per history depth (holtWinters bootstrap fetches from-7d; everything
-    // else from); a literal path (no wildcard chars) pushes the exact
-    // metric down into fetchMerged instead, so the level read prunes to
-    // one series
-    val mergedAll = scala.collection.mutable.Map.empty[Long, org.apache.spark.sql.DataFrame]
-    val fetch: graft.serving.TargetEval.WindowedFetch = { (glob, extraSec) =>
-      if (glob.forall(c => "*?[{".indexOf(c.toInt) < 0)) merged(Some(glob), extraSec)
-      else graft.serving.TargetEval.globFilter(
-        mergedAll.getOrElseUpdate(extraSec, merged(None, extraSec)), glob)
+    // one merged frame per (schema set, history depth) shared by every
+    // wildcard glob routed to that set (holtWinters bootstrap fetches
+    // from-7d; everything else from); a literal path (no wildcard chars)
+    // pushes the exact metric down into fetchMerged instead, so the level
+    // read prunes to one series. A frame whose snapshot went stale is
+    // dropped before the next plan, so a re-plan lists afresh.
+    val mergedAll = scala.collection.mutable.Map.empty[(Seq[HotCache], Long),
+      org.apache.spark.sql.DataFrame]
+    val fetch: TargetEval.WindowedFetch = { (glob, extraSec) =>
+      val hots = cachesFor(glob)
+      if (isLiteral(glob)) merged(hots, Some(glob), extraSec)
+      else TargetEval.globFilter(
+        mergedAll.getOrElseUpdate((hots, extraSec), merged(hots, None, extraSec)), glob)
     }
     // graphite-web maxDataPoints: consolidate each series to the client's
     // point budget (bucket = ceil(span / maxDataPoints), consolidateBy
@@ -402,13 +414,16 @@ final class CacheQueryServer(caches: Seq[HotCache], port: Int = 0,
     var budget = maxRows
     val entries = Vector.newBuilder[String]
     for (expr <- exprs) {
-      val out = consolidated(
-        graft.serving.TargetEval.evalWindowed(expr, fetch, Some(from),
-          window = Some((from, until))), expr)
       // collect one row past the remaining budget: silently truncating a
       // render (or dropping later targets wholesale) would serve data
       // that LIES — exhaustion is a loud client error instead
-      val rows = out.orderBy(col("metric"), col("ts")).limit(budget + 1).collect()
+      def plan(): org.apache.spark.sql.DataFrame = {
+        mergedAll.filterInPlace((_, df) => !SnapshotRead.stale(df))
+        consolidated(TargetEval.evalWindowed(expr, fetch, Some(from),
+          window = Some((from, until))), expr)
+          .orderBy(col("metric"), col("ts")).limit(budget + 1)
+      }
+      val rows = SnapshotRead.collect(plan())(plan())
       if (rows.length > budget)
         throw new IllegalArgumentException(
           s"render result exceeds maxRows=$maxRows across ${exprs.length} " +
@@ -427,6 +442,28 @@ final class CacheQueryServer(caches: Seq[HotCache], port: Int = 0,
       }
     }
     (200, entries.result().mkString("[", ",", "]"))
+  }
+
+  private def isLiteral(glob: String): Boolean = glob.forall(c => "*?[{".indexOf(c.toInt) < 0)
+
+  /** The caches whose schemas hold a series `glob` names, in route order —
+    * the reference opens only the file its index names for a series
+    * (kenshin/storage.py:617-694, index rurouni/cache.py:69-97). A literal
+    * path looks up its one catalog row; a glob runs one filter-and-distinct
+    * over `schema_name` (a per-partition distinct, so no shuffle). A cache
+    * whose store has no catalog is always read.
+    */
+  private def cachesFor(glob: String): Seq[HotCache] = {
+    val held = caches.flatMap(_.store.catalog).distinct.map { c =>
+      val hits =
+        if (isLiteral(glob)) c.metrics().where(col("metric") === glob)
+        else TargetEval.globFilter(c.metrics(), glob)
+      val names = hits.select(col("schema_name")).as(org.apache.spark.sql.Encoders.STRING)
+        .mapPartitions(_.toSet.iterator)(org.apache.spark.sql.Encoders.STRING)
+        .collect().toSet
+      c -> names
+    }.toMap
+    caches.filter(h => h.store.catalog.forall(c => held(c).contains(h.store.schema.name)))
   }
 
   private def esc(s: String): String =

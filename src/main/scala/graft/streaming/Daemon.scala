@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.core.StorageSchemas
+import graft.core.{StorageSchemas, TokenBucket}
 import graft.storage.{Catalog, MetricStore}
 import java.io.{BufferedReader, InputStreamReader}
 import java.net.{InetAddress, ServerSocket, Socket}
@@ -437,6 +437,21 @@ object Daemon {
     */
   final case class Route(store: MetricStore, cacheRetention: Long)
 
+  /** The reference's MAX_CREATES_PER_MINUTE default (BASELINE.md): new
+    * series one instance registers per minute.
+    */
+  val MaxCreatesPerMinute = 1000
+
+  /** The command line's catalog: one registry and one create throttle
+    * shared by every schema — a bucket of MAX_CREATES_PER_MINUTE tokens
+    * refilled at MAX_CREATES_PER_MINUTE / 60 per second, the reference's
+    * wiring (rurouni/cache.py:119-121).
+    */
+  def cliCatalog(root: String, schemas: StorageSchemas, numInstances: Int, instance: Int)
+                (implicit spark: SparkSession): Catalog =
+    new Catalog(root, schemas, numInstances = numInstances, instance = instance,
+      bucket = Some(new TokenBucket(MaxCreatesPerMinute, MaxCreatesPerMinute / 60.0)))
+
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
       "usage: Daemon <root> <retentions|storage-schemas.conf> [linePort] " +
@@ -458,6 +473,10 @@ object Daemon {
         sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // the default 100 generated classes do not hold one dashboard's
+      // render plans next to the micro-batch's, so identical renders
+      // recompiled on every repeat
+      .config("spark.sql.codegen.cache.maxEntries", "10000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val loaded =
@@ -474,8 +493,7 @@ object Daemon {
       if (loaded.exists(_.name == "default")) loaded
       else loaded :+ StorageSchemas.defaultSchema
     val schemas = new StorageSchemas(all)
-    val catalog = new Catalog(root, schemas, // shared: one registry, one throttle
-      numInstances = numInstances, instance = instance)
+    val catalog = cliCatalog(root, schemas, numInstances, instance)
     val stores = all.map(s => new MetricStore(root, s, Some(catalog)))
     val instr = new Instrumentation()
     val daemon = new Daemon(

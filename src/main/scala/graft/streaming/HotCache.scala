@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   * append/merge-on-read/flush contract is unchanged.
   */
 final class HotCache(val store: MetricStore, val cacheRetention: Long, val waitTime: Long)
-                    (implicit spark: SparkSession) {
+                    (implicit val spark: SparkSession) {
 
   private val step0: Int = store.archives.head.secondsPerPoint
   val hotPath: String = s"${store.root}/${store.schema.name}/hot"
@@ -153,33 +153,16 @@ final class HotCache(val store: MetricStore, val cacheRetention: Long, val waitT
   def hotView(): DataFrame =
     TimeSeries.lwwMerge(rawHot()).select(col("metric"), col("ts"), col("value"))
 
-  /** Full read path: hot ∪ historical with hot-wins precedence, at the
-    * archive resolution the fetch planner selects; gap-filled like a plain
-    * store fetch (reference read path: kenshin/storage.py:617-694 +
-    * rurouni web-side merge).
+  /** Full read path: the hot cache's raw rows merged over the level the
+    * fetch planner selects, gap-filled like a plain store fetch — one
+    * [[MetricStore.fetch]] with hot rows, so one scan of each table and one
+    * shuffle (reference read path: kenshin/storage.py:617-694 + rurouni
+    * web-side merge). Output (metric, ts, value) ordered by metric then ts;
+    * None when the range is entirely outside retention. Run the frame
+    * through [[graft.storage.SnapshotRead.collect]] when a flush may swap
+    * the tables it reads.
     */
   def fetchMerged(metricFilter: Option[String], fromTime: Long, untilTime: Long,
                   now: Long): Option[(Int, DataFrame)] =
-    TimeSeries.clampWindow(fromTime, untilTime, now, store.schema.maxRetention).map {
-      case (from, until) =>
-        val level = TimeSeries.selectArchive(store.archives, from, now)
-        val step = store.archives(level).secondsPerPoint
-        val hist = store.readLevel(level, TimeSeries.roundup(from, step), TimeSeries.roundup(until, step))
-        val hotWindow = hotView()
-          .where(col("ts") >= TimeSeries.roundup(from, step) && col("ts") < TimeSeries.roundup(until, step))
-        val hot = TimeSeries.rollup(hotWindow, step, store.schema.aggregationMethod)
-        val merged = TimeSeries.mergeHotHistorical(hot, hist)
-        val filtered = metricFilter.fold(merged)(m => merged.where(col("metric") === m))
-        // same catalog-backed spine as MetricStore.fetch: a registered but
-        // silent series must fetch as all-null here too, not vanish from
-        // the merged read path while appearing in the plain store fetch
-        val spine = store.catalog.map { c =>
-          val all = c.metrics().where(col("schema_name") === store.schema.name)
-            .select(col("metric"))
-          // same threshold-gated hint as MetricStore.fetch (Catalog doc)
-          metricFilter.fold(c.hintSmall(all))(m =>
-            broadcast(all.where(col("metric") === m)))
-        }
-        (level, TimeSeries.gapFill(filtered, from, until, step, spine).orderBy("metric", "ts"))
-    }
+    store.fetch(metricFilter, fromTime, untilTime, now, hot = Some(rawHot()))
 }

@@ -1,9 +1,9 @@
 package graft
 
-import graft.core.{Archive, StorageSchema, AggMethod}
+import graft.core.{Archive, StorageSchema, StorageSchemas, AggMethod}
 import graft.functions.Fnv1a
 import graft.ops.CacheQueryCli
-import graft.storage.MetricStore
+import graft.storage.{Catalog, MetricStore}
 import graft.streaming.{CacheQueryServer, HotCache, Instrumentation}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -35,14 +35,68 @@ class CacheQueryServerSpec extends AnyFunSuite with BeforeAndAfterAll {
     instr = new Instrumentation(hostname = "testhost")
     server = new CacheQueryServer(Seq(hot), port = 0, instr = Some(instr))
     port = server.start()
+    startMulti()
   }
 
   override def afterAll(): Unit = {
     server.stop()
+    multi.stop()
     import scala.reflect.io.Directory
     new Directory(new java.io.File(root.toString)).deleteRecursively()
     ()
   }
+
+  // ---- multi-schema fixture: five schemas (one per aggregation method)
+  // sharing one catalog, each with a 1 s and a 10 s level; `mnow` is
+  // aligned to the 10 s step and far from a day boundary
+  val mnow = 1700000000L
+  var multi: CacheQueryServer = _
+  var multiPort: Int = _
+
+  private def startMulti(): Unit = {
+    val mroot = s"$root/multi"
+    val schemas = AggMethod.all.map(a => StorageSchema(s"ms_${a.name}",
+      s"^ms\\.${a.name}\\.".r, 1.0, a, Seq(Archive(1, 600), Archive(10, 7200)), 1000, 8))
+    val catalog = new Catalog(mroot, new StorageSchemas(schemas))
+    val hots = schemas.map(s => new HotCache(new MetricStore(mroot, s, Some(catalog)), 1000L, 0L))
+    def rows(pts: (String, Long, Double)*) =
+      pts.map { case (m, ts, v) => (m, ts, v, 1L) }.toDF("metric", "ts", "value", "arrival")
+    def hotOf(a: AggMethod) = hots(AggMethod.all.indexOf(a))
+    // level 0 (the stores' writes, not the cache's): two `.a` series in two
+    // schemas, one sparse literal, tagged series in two schemas
+    hotOf(AggMethod.Average).store.writeBatch(rows(("ms.average.a", mnow - 4, 1.0),
+      ("ms.average.a", mnow - 3, 2.0), ("ms.average.cpu;dc=east", mnow - 4, 1.0)), mnow)
+    hotOf(AggMethod.Sum).store.writeBatch(rows(("ms.sum.a", mnow - 4, 10.0),
+      ("ms.sum.a", mnow - 3, 20.0), ("ms.sum.a", mnow - 2, 30.0), ("ms.sum.a", mnow - 1, 40.0),
+      ("ms.sum.b", mnow - 4, 5.0), ("ms.sum.cpu;dc=east", mnow - 4, 2.0),
+      ("ms.sum.cpu;dc=west", mnow - 4, 3.0)), mnow)
+    // level 1 (older than level 0's 600 s) and hot rows over one of its
+    // slots: the hot rows roll up with each schema's method and win
+    hots.foreach { h =>
+      val m = s"ms.${h.store.schema.aggregationMethod.name}.h"
+      h.store.writeBatch(rows((m, mnow - 700, 100.0), (m, mnow - 690, 9.0)), mnow)
+      h.processBatch(rows((m, mnow - 700, 1.0), (m, mnow - 699, 4.0), (m, mnow - 698, 2.0)), mnow)
+    }
+    hotOf(AggMethod.Average).processBatch(rows(("ms.average.a", mnow - 2, 3.0)), mnow)
+    // registered, never written
+    catalog.admit(rows(("ms.average.silent", mnow, 0.0), ("ms.sum.a", mnow, 0.0),
+      ("ms.sum.b", mnow, 0.0), ("ms.sum.cpu;dc=east", mnow, 0.0),
+      ("ms.sum.cpu;dc=west", mnow, 0.0), ("ms.average.cpu;dc=east", mnow, 0.0)), mnow).count()
+    multi = new CacheQueryServer(hots, port = 0)
+    multiPort = multi.start()
+  }
+
+  private def render(port: Int, target: String, from: Long, until: Long): String = {
+    val t = java.net.URLEncoder.encode(target, "UTF-8")
+    val in = java.net.URI.create(
+      s"http://127.0.0.1:$port/render?target=$t&from=$from&until=$until&now=$mnow")
+      .toURL.openStream()
+    try new String(in.readAllBytes(), "UTF-8") finally in.close()
+  }
+
+  private def series(name: String, points: (Long, Option[Double])*): String =
+    points.map { case (ts, v) => s"[$ts,${v.fold("null")(_.toString)}]" }
+      .mkString(s"""{"target":"$name","datapoints":[""", ",", "]}")
 
   test("client /query round trip returns the hot slots as JSON") {
     val body = CacheQueryCli.query("127.0.0.1", Seq(port), "web.req")
@@ -354,5 +408,99 @@ class CacheQueryServerSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(status(s"/render?target=$bad&from=0&until=10") == 400)
     val unknown = java.net.URLEncoder.encode("frobnicate(web.*)", "UTF-8")
     assert(status(s"/render?target=$unknown&from=0&until=10") == 400)
+  }
+
+  test("/render reads only the schemas holding each path, across schemas") {
+    val (a, b, c, d) = (mnow - 4, mnow - 3, mnow - 2, mnow - 1)
+    // a glob spanning two schemas: level 0 with a hot slot in one of them
+    assert(render(multiPort, "ms.*.a", a, mnow) == Seq(
+      series("ms.average.a", a -> Some(1.0), b -> Some(2.0), c -> Some(3.0), d -> None),
+      series("ms.sum.a", a -> Some(10.0), b -> Some(20.0), c -> Some(30.0), d -> Some(40.0))
+    ).mkString("[", ",", "]"))
+    assert(render(multiPort, "sumSeries(ms.*.a)", a, mnow) == Seq(series("sumSeries(ms.*.a)",
+      a -> Some(11.0), b -> Some(22.0), c -> Some(33.0), d -> Some(40.0))).mkString("[", ",", "]"))
+    // a literal path, and a registered series with no points (all null)
+    assert(render(multiPort, "ms.sum.b", a, mnow) ==
+      s"[${series("ms.sum.b", a -> Some(5.0), b -> None, c -> None, d -> None)}]")
+    assert(render(multiPort, "ms.average.silent", a, mnow) ==
+      s"[${series("ms.average.silent", a -> None, b -> None, c -> None, d -> None)}]")
+    // a literal nobody registered is an empty render, not an error
+    assert(render(multiPort, "ms.sum.nope", a, mnow) == "[]")
+    // seriesByTag across schemas
+    assert(render(multiPort, "seriesByTag(\"dc=east\")", a, mnow) == Seq(
+      series("ms.average.cpu;dc=east", a -> Some(1.0), b -> None, c -> None, d -> None),
+      series("ms.sum.cpu;dc=east", a -> Some(2.0), b -> None, c -> None, d -> None)
+    ).mkString("[", ",", "]"))
+  }
+
+  test("/render of a level-1 window rolls hot rows up with each schema's method") {
+    // hot rows 1, 4, 2 at mnow-700..-698 beat the level-1 value 100 in
+    // their slot; the next slot is level 1's own 9.0
+    val (s0, s1) = (mnow - 700, mnow - 690)
+    assert(render(multiPort, "ms.*.h", s0, mnow - 680) == Seq(
+      series("ms.average.h", s0 -> Some(7.0 / 3), s1 -> Some(9.0)),
+      series("ms.last.h", s0 -> Some(2.0), s1 -> Some(9.0)),
+      series("ms.max.h", s0 -> Some(4.0), s1 -> Some(9.0)),
+      series("ms.min.h", s0 -> Some(1.0), s1 -> Some(9.0)),
+      series("ms.sum.h", s0 -> Some(7.0), s1 -> Some(9.0))
+    ).mkString("[", ",", "]"))
+  }
+
+  test("/render without a catalog reads every schema and names series from the data") {
+    val nroot = s"$root/nocat"
+    val hots = Seq("a", "b").map(n => new HotCache(new MetricStore(nroot, StorageSchema(
+      s"nc_$n", s"^nc\\.$n\\.".r, 1.0, AggMethod.Average, Seq(Archive(1, 600)), 1000, 8)),
+      1000L, 0L))
+    hots.head.store.writeBatch(Seq(("nc.a.x", mnow - 2, 1.0, 1L))
+      .toDF("metric", "ts", "value", "arrival"), mnow)
+    hots(1).processBatch(Seq(("nc.b.y", mnow - 1, 2.0, 1L))
+      .toDF("metric", "ts", "value", "arrival"), mnow)
+    val srv = new CacheQueryServer(hots, port = 0)
+    val p = srv.start()
+    try {
+      val (x, y) = (series("nc.a.x", (mnow - 2) -> Some(1.0), (mnow - 1) -> None),
+        series("nc.b.y", (mnow - 2) -> None, (mnow - 1) -> Some(2.0)))
+      assert(render(p, "nc.*.*", mnow - 2, mnow) == s"[$x,$y]")
+      assert(render(p, "nc.b.y", mnow - 2, mnow) == s"[$y]")
+    } finally srv.stop()
+  }
+
+  test("a literal-path render runs at most one job more than /fetch of the series") {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val ended = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
+        ended.incrementAndGet(); ()
+      }
+    }
+    def fetch(): String = {
+      val in = java.net.URI.create(s"http://127.0.0.1:$multiPort/fetch?metric=ms.sum.b" +
+        s"&from=${mnow - 4}&until=$mnow&now=$mnow").toURL.openStream()
+      try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    }
+    // jobs a request runs, once the listener bus has seen every one end
+    def jobsOf(request: => String): Int = {
+      val (j0, e0) = (jobs.get, ended.get)
+      request
+      val deadline = System.currentTimeMillis() + 10000
+      var last = -1
+      while ((jobs.get != ended.get || jobs.get != last) && System.currentTimeMillis() < deadline) {
+        last = jobs.get
+        Thread.sleep(200)
+      }
+      assert(jobs.get - j0 == ended.get - e0)
+      jobs.get - j0
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      fetch(); render(multiPort, "ms.sum.b", mnow - 4, mnow) // warm the catalog cache
+      val f = jobsOf(fetch())
+      val r = jobsOf(render(multiPort, "ms.sum.b", mnow - 4, mnow))
+      info(s"literal-path render: $r jobs, /fetch: $f jobs")
+      assert(f > 0 && r <= f + 1, s"render ran $r jobs, fetch $f")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 }

@@ -90,6 +90,17 @@ class CatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(cat.admit(pts("m.a"), 200L).count() == 1)
   }
 
+  test("the command-line daemon's catalog throttles creates at 1000 a minute (BASELINE.md)") {
+    val cat = graft.streaming.Daemon.cliCatalog(s"$root/c13", schemas, 1, 0)
+    val b = cat.bucket.get
+    assert(b.capacity == 1000.0 && b.fillRate == 1000.0 / 60)
+    // a full bucket grants exactly its capacity: name 1001 of a burst drops
+    val burst = (0 to 1000).map(i => f"burst.$i%04d")
+    val out = cat.admit(pts(burst: _*), 100L)
+    assert(cat.creates == 1000 && cat.droppedCreates == 1)
+    assert(out.select("metric").as[String].collect().toSet == burst.take(1000).toSet)
+  }
+
   test("mis-routed metrics are rejected by the shard gate (rurouni/cache.py:123-128)") {
     val metricsForInstance0 = (1 to 100).map(i => s"m.$i").filter(Fnv1a.shard(_, 4) == 0)
     val other = (1 to 100).map(i => s"m.$i").find(Fnv1a.shard(_, 4) == 3).get
@@ -202,19 +213,6 @@ class CatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(base.select("metric").as[String].collect().toSeq == Seq("d.a"))
     assert(cat.metricCount() == 3)
     assert(cat.admit(pts("d.b"), 300L).count() == 1 && cat.creates == 3)
-  }
-
-  test("hintSmall stops forcing broadcast above the estate threshold") {
-    val cat = new Catalog(s"$root/c11", schemas)
-    cat.admit(pts("h.a", "h.b", "h.c"), 100L).count()
-    def hinted(c: Catalog) =
-      c.hintSmall(c.metrics()).queryExecution.analyzed.toString.contains("ResolvedHint")
-    assert(hinted(cat)) // 3 rows ≤ default 1M threshold: broadcast forced
-    spark.conf.set("spark.graft.catalog.broadcastMaxRows", "2")
-    try {
-      val big = new Catalog(s"$root/c11", schemas) // re-reads conf
-      assert(!hinted(big)) // 3 rows > threshold 2: planner decides
-    } finally spark.conf.unset("spark.graft.catalog.broadcastMaxRows")
   }
 
   test("remove deletes catalog rows") {

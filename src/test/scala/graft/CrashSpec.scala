@@ -103,16 +103,17 @@ class CrashSpec extends AnyFunSuite with BeforeAndAfterAll {
     // ---- phase 3: restart on the same spool/checkpoint/store -----------
     val l1 = track(DaemonHarness.spawn(daemonRoot))
     val mustServe = (aPts ++ journalSnapshot).distinct
+    val bodies = DaemonHarness.servedBodies(180, mustServe)(m =>
+      CacheQueryCli.query("127.0.0.1", Seq(l1.httpPort), m))
     for ((m, ts, v) <- mustServe) {
-      assert(DaemonHarness.poll(180) {
-        CacheQueryCli.query("127.0.0.1", Seq(l1.httpPort), m).contains(s"[$ts,$v]")
-      }, s"journaled point $m [$ts,$v] lost across the crash")
+      val at = DaemonHarness.slot(ts)
+      val body = bodies(m)
+      assert(body.contains(s"[$at,$v]"), s"journaled point $m [$ts,$v] lost across the crash")
       // exactly-once: the slot serves the exact value once — a replayed
       // batch that re-applied (sum/append without LWW) would either show
       // a different value or a duplicated datapoint for the slot
-      val body = CacheQueryCli.query("127.0.0.1", Seq(l1.httpPort), m)
-      assert(body.indexOf(s"[$ts,") == body.lastIndexOf(s"[$ts,"),
-        s"slot $m@$ts appears twice after replay: $body")
+      assert(body.indexOf(s"[$at,") == body.lastIndexOf(s"[$at,"),
+        s"slot $m@$at appears twice after replay: $body")
     }
 
     // catalog recovery: every journaled metric findable exactly once
@@ -165,16 +166,21 @@ class CrashSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the uncommitted batch replays from the spool, LWW upsert converges
     val l1 = track(DaemonHarness.spawn(daemonRoot))
     // stragglers live in the STORE, not the hot cache — assert through the
-    // full hot∪historical fetch path, not the cache-only /query endpoint
-    def fetched(m: String): String = CacheQueryCli.fetch(
-      "127.0.0.1", Seq(l1.httpPort), m, now - 2500, now - 2200,
-      System.currentTimeMillis() / 1000L)
+    // full hot∪historical fetch path, not the cache-only /query endpoint.
+    // The window runs to the present: a daemon that lived past its
+    // self-metrics interval has journaled its own `rurouni.*` points at
+    // the current time, and those must survive too.
+    def fetched(m: String): String = {
+      val nowSec = System.currentTimeMillis() / 1000L
+      CacheQueryCli.fetch("127.0.0.1", Seq(l1.httpPort), m, now - 2500, nowSec + 10, nowSec)
+    }
+    val bodies = DaemonHarness.servedBodies(180, journalSnapshot.distinct)(fetched)
     for ((m, ts, v) <- journalSnapshot.distinct) {
-      assert(DaemonHarness.poll(180) { fetched(m).contains(s"[$ts,$v]") },
-        s"point $m [$ts,$v] lost across the mid-swap crash")
-      val body = fetched(m)
-      assert(body.indexOf(s"[$ts,") == body.lastIndexOf(s"[$ts,"),
-        s"slot $m@$ts appears twice after mid-swap replay: $body")
+      val at = DaemonHarness.slot(ts)
+      val body = bodies(m)
+      assert(body.contains(s"[$at,$v]"), s"point $m [$ts,$v] lost across the mid-swap crash")
+      assert(body.indexOf(s"[$at,") == body.lastIndexOf(s"[$at,"),
+        s"slot $m@$at appears twice after mid-swap replay: $body")
     }
     // no crash debris left behind once recovery + replay have run
     assert(DaemonHarness.poll(120) {

@@ -23,13 +23,24 @@ object DaemonHarness {
 
   final case class Live(proc: Process, linePort: Int, httpPort: Int)
 
+  /** Every daemon this JVM spawned. A test JVM that exits before its
+    * suite's afterAll (sbt interrupted, a fork timeout) would otherwise
+    * leave them orphaned, micro-batching forever on the box.
+    */
+  private val spawnedProcs = java.util.concurrent.ConcurrentHashMap.newKeySet[Process]()
+  Runtime.getRuntime.addShutdownHook(new Thread(() =>
+    spawnedProcs.forEach(p => { p.destroyForcibly(); () })))
+
   /** Launch the daemon CLI against `root`; block until its banner names
-    * the bound ports. Small core budget so several instances plus the
-    * test JVM coexist on one box.
+    * the bound ports. Small core and heap budgets so several instances
+    * plus the test JVMs coexist on one box: the specs' estates are a few
+    * dozen series, and at 4g apiece three daemons grew to 7 GB of RSS next
+    * to eight test JVMs on a 15 GB box, where the kernel then killed test
+    * JVMs for memory.
     */
   def spawn(root: String, retentions: String = "10s:1h",
             numInstances: Int = 1, instance: Int = 0,
-            cores: Int = 3, xmx: String = "4g",
+            cores: Int = 3, xmx: String = "1g",
             extraEnv: Map[String, String] = Map.empty): Live = {
     val java = System.getProperty("java.home") + "/bin/java"
     val cmd = Seq(java, s"-Xmx$xmx", "-cp", System.getProperty("java.class.path")) ++
@@ -39,9 +50,13 @@ object DaemonHarness {
     val pb = new ProcessBuilder(cmd: _*)
     pb.environment().put("SPARK_MASTER", s"local[$cores]")
     pb.environment().put("SPARK_GRAFT_CPUS", cores.toString)
+    // glibc's per-thread malloc arenas otherwise add hundreds of MB of RSS
+    // to a JVM with Spark's thread count
+    pb.environment().put("MALLOC_ARENA_MAX", "2")
     extraEnv.foreach { case (k, v) => pb.environment().put(k, v) }
     pb.redirectErrorStream(true)
     val proc = pb.start()
+    spawnedProcs.add(proc)
     val banner = """lines on 127\.0\.0\.1:(\d+), http on 127\.0\.0\.1:(\d+)""".r
     val reader = new BufferedReader(new InputStreamReader(proc.getInputStream))
     val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(180)
@@ -76,6 +91,29 @@ object DaemonHarness {
     }) { setDaemon(true); start() }
     Live(proc, ports.get._1, ports.get._2)
   }
+
+  /** The slot a point serves at under the default `10s:1h` retention: its
+    * timestamp aligned down to 10 s. Test points are sent on slot
+    * boundaries; the daemon's own `rurouni.*` self-metrics are stamped at
+    * the second they were drained.
+    */
+  def slot(ts: Long): Long = ts - Math.floorMod(ts, 10L)
+
+  /** Poll each metric's served body, `read(metric)`, until it shows
+    * `[slot(ts),v]` for every one of that metric's `pts` — one request per
+    * metric a round, not one per point. Returns each metric's last body,
+    * for the caller to assert on per point.
+    */
+  def servedBodies(deadlineSec: Int, pts: Seq[(String, Long, Double)])
+                  (read: String => String): Map[String, String] =
+    pts.groupBy(_._1).map { case (m, mine) =>
+      var body = ""
+      poll(deadlineSec) {
+        body = read(m)
+        mine.forall { case (_, ts, v) => body.contains(s"[${slot(ts)},$v]") }
+      }
+      m -> body
+    }
 
   def send(port: Int, lines: Seq[String]): Unit = {
     val sock = new Socket("127.0.0.1", port)

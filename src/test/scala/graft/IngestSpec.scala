@@ -158,6 +158,38 @@ class IngestSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got == Seq((now - 1200, 9.0), (now - 100, 5.0)))
   }
 
+  test("a serving read planned before a swap and run after it reads the whole day") {
+    import graft.core.StorageSchemas
+    import graft.storage.{Catalog, SnapshotRead}
+    val sch = schema("sw", Seq(Archive(1, 3600), Archive(10, 86400)))
+    val catalog = new Catalog(s"$root/sw", new StorageSchemas(Seq(sch)))
+    val store = new MetricStore(s"$root/sw", sch, Some(catalog))
+    val hot = new HotCache(store, 600, 0)
+    val now = 1700006400L // aligned to a whole day: the window is one pday
+    val m = "bench.sum.g3.s07"
+    catalog.admit(Seq((m, now, 0.0, 0L)).toDF("metric", "ts", "value", "arrival"), now).count()
+    // 240 slots of history in level 0 and 40 hot slots after them
+    store.writeBatch((1 to 240).map(i => (m, now - 300 + i - 1, i.toDouble, 1L))
+      .toDF("metric", "ts", "value", "arrival"), now, upsert = true)
+    hot.processBatch((1 to 40).map(i => (m, now - 60 + i - 1, 1000.0 + i, 1L))
+      .toDF("metric", "ts", "value", "arrival"), now)
+    def plan() = hot.fetchMerged(Some(m), now - 300, now, now).get._2
+    def nonNull(rows: Array[org.apache.spark.sql.Row]) = rows.count(!_.isNullAt(2))
+    // a flush lands between planning and running: it swaps the same day
+    // of level 0 (rewriting one slot), so the listed files are gone
+    val planned = plan()
+    store.upsertSlots(0, Seq((m, now - 300, 7.0, 2L)).toDF("metric", "ts", "value", "arrival"))
+    assert(SnapshotRead.stale(planned))
+    val rows = SnapshotRead.collect(planned)(plan())
+    assert(rows.length == 300 && nonNull(rows) == 280, s"${nonNull(rows)} non-null slots")
+    assert(rows.head.getDouble(2) == 7.0) // the post-swap day, whole
+    // a read no swap overlapped is not stale and runs once
+    val quiet = plan()
+    assert(!SnapshotRead.stale(quiet))
+    var replans = 0
+    assert(nonNull(SnapshotRead.collect(quiet) { replans += 1; plan() }) == 280 && replans == 0)
+  }
+
   test("streaming e2e: MemoryStream lines -> hot cache -> store (foreachBatch wiring)") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext

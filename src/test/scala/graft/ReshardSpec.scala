@@ -97,12 +97,11 @@ class ReshardSpec extends AnyFunSuite with BeforeAndAfterAll {
     val newHttp = live.map(_.httpPort)
 
     // the routed client finds every point at its exact value, exactly once
+    val fetched = DaemonHarness.servedBodies(120, pts)(m =>
+      CacheQueryCli.fetch("127.0.0.1", newHttp, m, now - 3600, now + 60, now))
     for ((m, ts, v) <- pts) {
-      assert(DaemonHarness.poll(120) {
-        CacheQueryCli.fetch("127.0.0.1", newHttp, m, now - 3600, now + 60, now)
-          .contains(s"[$ts,$v]")
-      }, s"$m [$ts,$v] lost in the re-shard")
-      val body = CacheQueryCli.fetch("127.0.0.1", newHttp, m, now - 3600, now + 60, now)
+      val body = fetched(m)
+      assert(body.contains(s"[$ts,$v]"), s"$m [$ts,$v] lost in the re-shard")
       assert(body.indexOf(s"[$ts,") == body.lastIndexOf(s"[$ts,"),
         s"slot $m@$ts duplicated after migration: $body")
     }

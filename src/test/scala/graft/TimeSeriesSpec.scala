@@ -24,6 +24,11 @@ class TimeSeriesSpec extends AnyFunSuite {
   def df(points: Seq[(String, Long, Double, Long)]) =
     points.toDF("metric", "ts", "value", "arrival")
 
+  // the hot side of the merged read alone: rows rolled up to `step` slots
+  def rollup(hot: org.apache.spark.sql.DataFrame, from: Long, until: Long, step: Int,
+             agg: AggMethod) =
+    TimeSeries.mergeSlots(Some(hot), df(Seq.empty), None, from, until, step, agg)
+
   test("alignTs floors to step (kenshin/storage.py:429)") {
     val out = df(genPoints(1 to 5))
       .select(TimeSeries.alignTs(col("ts"), 3).as("a"), col("ts"))
@@ -48,7 +53,7 @@ class TimeSeriesSpec extends AnyFunSuite {
   test("basic update+fetch identity at finest archive (tests/test_storage.py:73-85)") {
     val pts = genPoints(1 to 5)
     val deduped = TimeSeries.alignDedup(df(pts), 1, col("arrival"))
-    val fetched = TimeSeries.gapFill(deduped, nowTs - 5, nowTs, 1)
+    val fetched = TimeSeries.mergeSlots(None, deduped, None, nowTs - 5, nowTs, 1, AggMethod.Min)
       .orderBy("metric", "ts").as[(String, Long, Option[Double])].collect()
     val expected = (1 to 5).reverse.map(i => ("cpu0", nowTs - i, Some(0.0 + i))) ++
       (1 to 5).reverse.map(i => ("cpu1", nowTs - i, Some(10.0 + i)))
@@ -58,7 +63,7 @@ class TimeSeriesSpec extends AnyFunSuite {
   test("rollup min propagation (tests/test_storage.py:87-97)") {
     // 6 points, 3s archive, agg=min: windows aligned to floor(ts/3)*3
     val pts = genPoints(1 to 6)
-    val rolled = TimeSeries.rollup(df(pts), 3, AggMethod.Min)
+    val rolled = rollup(df(pts), nowTs - 7, nowTs + 2, 3, AggMethod.Min)
       .orderBy("metric", "ts").as[(String, Long, Double)].collect()
     // expected: per metric, min over each 3s window of [now-6, now-1]
     val byWindow = (1 to 6).groupBy(i => ((nowTs - i) / 3) * 3)
@@ -73,7 +78,7 @@ class TimeSeriesSpec extends AnyFunSuite {
   test("all five aggregation methods on 0..9 (tests/test_agg.py:16-39)") {
     val pts = (0 to 9).map(i => ("m", 100L + i, i.toDouble, i.toLong))
     def run(a: AggMethod): Double =
-      TimeSeries.rollup(df(pts), 100, a).as[(String, Long, Double)].collect().head._3
+      rollup(df(pts), 100, 200, 100, a).as[(String, Long, Double)].collect().head._3
     assert(run(AggMethod.Average) == 4.5)
     assert(run(AggMethod.Sum) == 45.0)
     assert(run(AggMethod.Last) == 9.0)
@@ -85,12 +90,12 @@ class TimeSeriesSpec extends AnyFunSuite {
     val pts = Seq(("m", 100L, 1.0, 1L), ("m", 101L, Double.NaN, 2L), ("m", 102L, 3.0, 3L))
       .toDF("metric", "ts", "value", "arrival")
       .withColumn("value", when(isnan(col("value")), lit(null)).otherwise(col("value")))
-    val out = TimeSeries.rollup(pts, 100, AggMethod.Last).as[(String, Long, Double)].collect()
+    val out = rollup(pts, 100, 200, 100, AggMethod.Last).as[(String, Long, Double)].collect()
     assert(out.head._3 == 3.0)
     // all-null window -> null
     val allNull = Seq(("m", 100L, 1.0, 1L)).toDF("metric", "ts", "value", "arrival")
       .withColumn("value", lit(null).cast("double"))
-    val out2 = TimeSeries.rollup(allNull, 100, AggMethod.Last)
+    val out2 = rollup(allNull, 100, 200, 100, AggMethod.Last)
       .select(col("value")).collect()
     assert(out2.head.isNullAt(0))
   }
@@ -136,10 +141,34 @@ class TimeSeriesSpec extends AnyFunSuite {
   }
 
   test("hot-wins cache merge (rurouni/cache.py:161-169)") {
-    val hist = Seq(("m", 100L, 1.0), ("m", 101L, 2.0)).toDF("metric", "ts", "value")
-    val hot = Seq(("m", 101L, 99.0), ("m", 102L, 3.0)).toDF("metric", "ts", "value")
-    val merged = TimeSeries.mergeHotHistorical(hot, hist)
-      .orderBy("ts").as[(String, Long, Double)].collect()
-    assert(merged.toSeq == Seq(("m", 100L, 1.0), ("m", 101L, 99.0), ("m", 102L, 3.0)))
+    // level rows carry a superseded duplicate at 100 (arrival 1 loses to 2)
+    val hist = df(Seq(("m", 100L, 7.0, 1L), ("m", 100L, 1.0, 2L), ("m", 101L, 2.0, 1L)))
+    val hot = df(Seq(("m", 101L, 99.0, 1L), ("m", 102L, 3.0, 1L)))
+    val merged = TimeSeries.mergeSlots(Some(hot), hist, None, 100L, 104L, 1, AggMethod.Average)
+      .orderBy("ts").as[(String, Long, Option[Double])].collect()
+    assert(merged.toSeq == Seq(("m", 100L, Some(1.0)), ("m", 101L, Some(99.0)),
+      ("m", 102L, Some(3.0)), ("m", 103L, None)))
+  }
+
+  test("mergeSlots rolls hot rows up to the level step, hot wins its whole slot") {
+    // level step 3: the slot at 99 has a level value and two hot rows, the
+    // slot at 102 only a level value, the slot at 105 nothing
+    val hist = df(Seq(("m", 99L, 50.0, 1L), ("m", 102L, 60.0, 1L)))
+    val hot = df(Seq(("m", 100L, 4.0, 1L), ("m", 101L, 8.0, 1L)))
+    val spine = Seq("m", "silent").toDF("metric")
+    val merged = TimeSeries.mergeSlots(Some(hot), hist, Some(spine), 99L, 108L, 3, AggMethod.Sum)
+      .orderBy("metric", "ts").as[(String, Long, Option[Double])].collect()
+    assert(merged.toSeq == Seq(("m", 99L, Some(12.0)), ("m", 102L, Some(60.0)),
+      ("m", 105L, None), ("silent", 99L, None), ("silent", 102L, None), ("silent", 105L, None)))
+  }
+
+  test("mergeSlots keeps only spine series and needs one shuffle") {
+    val hist = df(Seq(("m", 99L, 50.0, 1L), ("other", 99L, 1.0, 1L)))
+    val out = TimeSeries.mergeSlots(Some(df(Seq(("m", 100L, 4.0, 1L)))), hist,
+      Some(Seq("m").toDF("metric")), 99L, 102L, 3, AggMethod.Average)
+    // the plan before it runs (under AQE a run adds query-stage nodes)
+    val plan = out.queryExecution.executedPlan.toString
+    assert("Exchange".r.findAllMatchIn(plan).length == 1, plan)
+    assert(out.as[(String, Long, Option[Double])].collect().toSeq == Seq(("m", 99L, Some(4.0))))
   }
 }
