@@ -103,7 +103,6 @@ object Bench {
     val total = results.values.map(_._1).sum
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"sf":"$sfDir"}"""
-    println(line)
     // also persist beside the run: the driver captures stdout with a tail
     // window, which truncated the first 13 per-query entries in round 4 —
     // the on-disk copy keeps the artifact self-contained regardless
@@ -116,11 +115,13 @@ object Bench {
     // AFTER the JSON — the driver parses the LAST line of output, and in
     // rounds 13/14 a trailing WARN + sbt "[success]" line made the bench
     // unparseable (PERF graded blind). Silence shutdown logging, stop the
-    // session, then re-print the JSON as the absolute final act (build.sbt
-    // sets Global/showSuccess := false so sbt adds nothing after it).
+    // session, then print the JSON once, as the absolute final act, even
+    // when the stop throws (build.sbt sets Global/showSuccess := false so
+    // sbt adds nothing after it).
     spark.sparkContext.setLogLevel("ERROR")
-    spark.stop()
-    println(line)
+    try spark.stop()
+    catch { case scala.util.control.NonFatal(e) => System.err.println(s"[bench] spark.stop failed: $e") }
+    finally println(line)
     if (results.values.exists(_._2.isDefined)) sys.exit(1)
   }
 }

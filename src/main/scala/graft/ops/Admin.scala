@@ -40,7 +40,7 @@ object Admin {
           .parquet(graft.storage.SafeSwap.stagingPath(path))
         // backup-swap (never delete-then-rename): a crash leaves either the
         // old or the new table readable
-        graft.storage.SafeSwap.commit(fs, path)
+        MetricStore.commitRewrite(fs, path)
       }
     }
     store.catalog.foreach(_.remove(metrics))
@@ -98,7 +98,9 @@ object Admin {
         // finer levels get a larger arrival bonus: when two old levels land
         // in the same new slot, the finer one wins the LWW tie-break
         val arrival = (col("ts") * levels + lit(levels - 1 - i)).as("arrival")
-        fresh.writeBatch(rows.select(col("metric"), col("ts"), col("value"), arrival), now)
+        // the rows are one per slot of the old level's step already
+        fresh.writeBatch(rows.select(col("metric"), col("ts"), col("value"), arrival), now,
+          alignedStep = old.archives(i).secondsPerPoint)
         ()
       }
     }

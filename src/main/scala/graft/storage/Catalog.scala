@@ -225,14 +225,25 @@ final class Catalog(val root: String, val schemas: StorageSchemas,
     // catalog side (pre-partitioned + sorted), O(batch) on the points side
     val fresh = points.select(col("metric")).distinct()
       .join(metrics().select(col("metric")), Seq("metric"), "left_anti")
-      .persist()
+    // steady state (every metric already registered): nothing to write,
+    // nothing to drop — the batch passes through with zero extra plan
+    register(fresh, now).fold(points)(r => points.join(broadcast(r), Seq("metric"), "left_anti"))
+  }
+
+  /** The registration half of [[admit]], for a caller that has already
+    * found its batch's first-seen names (`fresh`, one distinct `metric`
+    * column, none of them registered). Registers the granted shard-local
+    * names and returns the rejected ones, materialized lineage-free, or
+    * None when every name was admitted; drop the points of the returned
+    * names with a broadcast left anti-join.
+    */
+  private[graft] def register(freshNames: DataFrame, now: Long): Option[DataFrame] = {
+    val fresh = freshNames.persist()
     try {
       val row = fresh
         .agg(count(lit(1)).as("total"), count(when(shardOkCol, 1)).as("ok")).head()
       val total = row.getLong(0); val ok = row.getLong(1)
-      // steady state (every metric already registered): nothing to write,
-      // nothing to drop — the batch passes through with zero extra plan
-      if (total == 0) return points
+      if (total == 0) return None
       // the reference walks creates in sorted name order and consumes ONE
       // TOKEN PER NAME WALKED — token_bucket.consume(1) runs BEFORE the
       // instance check (rurouni/cache.py:119-128), so a shard-foreign name
@@ -269,11 +280,10 @@ final class Catalog(val root: String, val schemas: StorageSchemas,
         }
         creates += nAdmitted
         droppedCreates += total - nAdmitted
-        // drop a point iff its metric was first-seen AND not granted; the
-        // build side is O(batch rejects), so the broadcast is always small
-        // (contrast: the old gate broadcast the full estate every batch)
-        rejected.fold(points)(r =>
-          points.join(broadcast(r), Seq("metric"), "left_anti"))
+        // the gate's build side is O(batch rejects), so its broadcast is
+        // always small (contrast: the old gate broadcast the full estate
+        // every batch)
+        rejected
       } finally admitted.unpersist(false)
     } finally fresh.unpersist(false)
   }

@@ -83,8 +83,13 @@ final class MetricStore(val root: String, val schema: StorageSchema,
     * each slice to its level table, and record the written window in the
     * level's dirty state for the cascade. Returns the number of dropped
     * too-old points.
+    *
+    * `alignedStep`: the points are already aligned and LWW-resolved at this
+    * step, so a level with the same step takes them as they are instead of
+    * deduplicating them a second time (0: raw points).
     */
-  def writeBatch(points: DataFrame, now: Long, upsert: Boolean = false): Long = {
+  def writeBatch(points: DataFrame, now: Long, upsert: Boolean = false,
+                 alignedStep: Int = 0): Long = {
     val routed = TimeSeries.ageRoute(points, archives, now).cache()
     try {
       // one small pass for per-level counts + written ts window (the dirty
@@ -95,17 +100,17 @@ final class MetricStore(val root: String, val schema: StorageSchema,
       archives.indices.filter(i => stats.get(i).exists(_._1 > 0)).foreach { i =>
         val step = archives(i).secondsPerPoint
         val slice = routed.where(col("level") === i).drop("level")
-        val deduped = TimeSeries.alignDedup(slice, step, col("arrival"))
-        if (upsert) upsertSlots(i, deduped)
+        val deduped =
+          if (step == alignedStep) slice else TimeSeries.alignDedup(slice, step, col("arrival"))
+        val (_, lo, hi) = stats(i)
+        val (alignedLo, alignedHi) = (floorTo(lo, step), floorTo(hi, step))
+        if (upsert) upsertSlots(i, deduped, alignedLo, alignedHi)
         else {
+          recordWrite(i, alignedLo, alignedHi)
           withPday(deduped).write
             .mode(SaveMode.Append)
             .partitionBy("pday")
             .parquet(levelPath(i))
-          val (_, lo, hi) = stats(i)
-          val alignedLo = lo - java.lang.Math.floorMod(lo, step.toLong)
-          val alignedHi = hi - java.lang.Math.floorMod(hi, step.toLong)
-          if (i < archives.length - 1) mergeDirty(i, alignedLo, alignedHi + 1)
         }
       }
       stats.get(-1).map(_._1).getOrElse(0L)
@@ -115,39 +120,44 @@ final class MetricStore(val root: String, val schema: StorageSchema,
     }
   }
 
+  private def floorTo(ts: Long, step: Int): Long = ts - java.lang.Math.floorMod(ts, step.toLong)
+
   /** Idempotent MERGE-style slot upsert: resolve the batch against the pday
     * partitions it touches (last-write-wins) and swap ONLY those partitions.
     * Replaying the same batch converges to the same table state — the
     * exactly-once flush primitive for streaming (reference idempotent slot
-    * overwrite: kenshin/storage.py:429-445). `points` must already be
-    * aligned to level i's step and carry `arrival`.
+    * overwrite: kenshin/storage.py:429-445). `points` must be aligned to
+    * level i's step and carry `arrival`; duplicate slots among them are
+    * fine, the merge resolves them with the table's rows.
+    *
+    * `lo` and `hi` bound the points' ts (aligned to the step) and come from
+    * the caller, who already knows them from its own batch figures: they
+    * pick the day partitions to rewrite and widen the level's dirty window,
+    * so the upsert runs no job of its own before its one write. Bounds wider
+    * than the points cost rewriting days unchanged, never data.
     */
-  def upsertSlots(i: Int, points: DataFrame): Unit = {
-    val cached = points.cache()
-    try {
-      val head = cached.agg(min(col("ts")).as("lo"), max(col("ts")).as("hi")).head()
-      if (head.isNullAt(0)) return
-      val (lo, hi) = (head.getLong(0), head.getLong(1))
-      val loDay = lo / 86400L
-      val hiDay = hi / 86400L
-      val target = levelPath(i)
-      val existing =
-        if (hasData(target))
-          spark.read.parquet(target)
-            .where(col("pday").between(loDay, hiDay))
-            .select(col("metric"), col("ts"), col("value"), col("arrival"))
-        else spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], levelSchema)
-      swapPartitions(target, loDay, hiDay, lww(existing.unionByName(cached)))
-      if (i < archives.length - 1) {
-        val step = archives(i).secondsPerPoint.toLong
-        mergeDirty(i, lo - java.lang.Math.floorMod(lo, step), hi + 1)
-      }
-    } finally {
-      cached.unpersist()
-      ()
-    }
+  def upsertSlots(i: Int, points: DataFrame, lo: Long, hi: Long): Unit = {
+    recordWrite(i, lo, hi)
+    val (loDay, hiDay) = (lo / 86400L, hi / 86400L)
+    val target = levelPath(i)
+    val existing =
+      if (hasData(target))
+        spark.read.parquet(target)
+          .where(col("pday").between(loDay, hiDay))
+          .select(col("metric"), col("ts"), col("value"), col("arrival"))
+      else spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], levelSchema)
+    swapPartitions(target, loDay, hiDay, lww(existing.unionByName(points)))
   }
+
+  /** Widen level i's dirty window over the slots [lo, hi] a write is about
+    * to land, BEFORE it lands: a crash after the write then still leaves
+    * the cascade the window to propagate (propagation recomputes from
+    * source, so a window recorded for a write that never landed costs a
+    * recompute, never data). The coarsest level has no cascade below it.
+    */
+  private[graft] def recordWrite(i: Int, lo: Long, hi: Long): Unit =
+    if (i < archives.length - 1) mergeDirty(i, floorTo(lo, archives(i).secondsPerPoint), hi + 1)
 
   /** Stage `merged` and swap it in for pday partitions [loDay, hiDay] of
     * `target` — partitions outside the range are untouched. (At cluster
@@ -562,8 +572,18 @@ object MetricStore {
     new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
   private def generationOf(target: String): java.util.concurrent.atomic.AtomicLong =
     swapGenerations.computeIfAbsent(target, _ => new java.util.concurrent.atomic.AtomicLong())
-  private[storage] def swapGeneration(target: String): Long = generationOf(target).get()
+  private[graft] def swapGeneration(target: String): Long = generationOf(target).get()
   private def bumpSwapGeneration(target: String): Unit = { generationOf(target).incrementAndGet(); () }
+
+  /** [[SafeSwap.commit]] of a whole rewritten table, counted as a swap of
+    * it: a snapshot read planned before it re-plans, and a
+    * [[graft.streaming.HotCache]] over it re-reads its span of slots.
+    */
+  private[graft] def commitRewrite(fs: org.apache.hadoop.fs.FileSystem, target: String): Unit =
+    swapMonitor(target).synchronized {
+      bumpSwapGeneration(target)
+      SafeSwap.commit(fs, target)
+    }
 
   /** Tables with a swap IN FLIGHT in this JVM (staging write + rename
     * window). A reader-side recoverSwap probe must no-op for these: its

@@ -2,7 +2,6 @@ package graft.storage
 
 import graft.core.{AggMethod, Archive}
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Core time-series dataflow operators, expressed as declarative DataFrame
@@ -27,16 +26,13 @@ object TimeSeries {
     * by `arrival` (the raw pre-floor event time or an explicit source
     * offset — NOT a partition-dependent id, so replay is deterministic),
     * ties broken by the larger value. The winning row's arrival is kept for
-    * downstream cross-batch LWW. One shuffle on (metric, aligned_ts).
+    * downstream cross-batch LWW. This is [[lwwMerge]] over the aligned ts:
+    * a grouped aggregate, so it partially aggregates map-side before its
+    * one shuffle on (metric, aligned ts).
     */
-  def alignDedup(df: DataFrame, stepSeconds: Int, arrival: Column): DataFrame = {
-    val w = Window.partitionBy(col("metric"), col("aligned_ts"))
-      .orderBy(arrival.desc, col("value").desc)
-    df.withColumn("aligned_ts", alignTs(col("ts"), stepSeconds))
-      .withColumn("__rn", row_number().over(w))
-      .where(col("__rn") === 1)
-      .select(col("metric"), col("aligned_ts").as("ts"), col("value"), arrival.as("arrival"))
-  }
+  def alignDedup(df: DataFrame, stepSeconds: Int, arrival: Column): DataFrame =
+    lwwMerge(df.select(col("metric"), alignTs(col("ts"), stepSeconds).as("ts"),
+      col("value"), arrival.as("arrival")))
 
   /** Fetch-window clamp (reference: kenshin/storage.py:626-637):
     * reject inverted ranges, clamp to [now - maxRetention, now]; None when
@@ -68,12 +64,15 @@ object TimeSeries {
     * (dropped, counted by caller). Reference: kenshin/storage.py:397-419.
     * Pure projection — no shuffle.
     */
-  def ageRoute(df: DataFrame, archives: Seq[Archive], now: Long): DataFrame = {
+  def ageRoute(df: DataFrame, archives: Seq[Archive], now: Long): DataFrame =
+    df.withColumn("level", ageLevel(archives, now))
+
+  /** The level [[ageRoute]] assigns, as a column over `ts`. */
+  def ageLevel(archives: Seq[Archive], now: Long): Column = {
     val age = lit(now) - col("ts")
-    val level = archives.zipWithIndex.foldRight(lit(-1): Column) {
+    archives.zipWithIndex.foldRight(lit(-1): Column) {
       case ((archive, i), elseCol) => when(age <= archive.retention, lit(i)).otherwise(elseCol)
     }
-    df.withColumn("level", level)
   }
 
   /** The merged read in one shuffle: hot-cache rows over level rows,

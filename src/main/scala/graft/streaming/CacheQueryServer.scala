@@ -160,12 +160,8 @@ final class CacheQueryServer(caches: Seq[HotCache], port: Int = 0,
     val metric = need(p, "metric")
     instr.foreach(_.incr("cacheQueries"))
     val hot = cacheFor(metric)
-    val rows = hot.hotView().where(col("metric") === metric)
-      .orderBy(col("ts"))
-      .select(col("ts"), col("value"))
-      .collect()
     val step = hot.store.archives.head.secondsPerPoint
-    (200, jsonSeries(metric, step, rows.map(r => (r.getLong(0), Some(r.getDouble(1))))))
+    (200, jsonSeries(metric, step, hot.hotSeries(metric).map { case (ts, v) => (ts, Some(v)) }.toArray))
   }
 
   private def handleFetch(p: Map[String, String]): (Int, String) = {

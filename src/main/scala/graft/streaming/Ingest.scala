@@ -15,8 +15,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 object Ingest {
 
   /** Parse raw protocol lines into points. Bad lines (wrong field count,
-    * non-numeric value/ts) become nulls and are filtered out — the stream
-    * never dies on malformed input, matching the reference's drop+log.
+    * non-numeric value/ts) drop — the stream never dies on malformed input,
+    * matching the reference's drop+log.
     * Output: (metric, ts epoch-seconds long, value double, arrival long).
     *
     * `arrival` (the LWW tiebreaker) is the raw event timestamp at nanosecond
@@ -26,34 +26,12 @@ object Ingest {
     * value (TimeSeries.alignDedup). A Kafka source should pass its offset
     * here instead for true write-order LWW.
     */
-  def parseLines(lines: DataFrame): DataFrame = {
-    val parts = split(trim(col("line")), "\\s+")
-    // try_cast, not cast: under ANSI mode (Spark 4 default) a plain cast
-    // would kill the stream on the first malformed number
-    lines
-      .withColumn("p", parts)
-      .where(size(col("p")) === 3)
-      .select(
-        col("p").getItem(0).as("metric"),
-        col("p").getItem(2).try_cast("double").as("raw_ts"),
-        col("p").getItem(1).try_cast("double").as("value"))
-      .where(col("metric").isNotNull && col("raw_ts").isNotNull && col("value").isNotNull)
-      .select(col("metric") +: tsCols(col("raw_ts")) :+ col("value"): _*)
-      .where(col("ts").isNotNull && col("arrival").isNotNull)
-      .select(col("metric"), col("ts"), col("value"), col("arrival"))
-  }
+  def parseLines(lines: DataFrame): DataFrame = valid(markLines(lines))
 
-  /** ts + arrival conversion, overflow-safe end to end: try_cast (never
-    * plain cast) so a NaN/Infinity/out-of-range timestamp — e.g. an
-    * ms-epoch where seconds were expected, which exceeds decimal(21,9) —
-    * nulls out and drops as malformed instead of throwing under ANSI mode
-    * and killing the stream. Decimal, not double, math for arrival:
-    * ts*1e9 exceeds the 52-bit double mantissa and would round the
-    * tiebreaker.
+  /** Count of malformed lines in a batch (the reference logs+counts them;
+    * we surface the same signal for instrumentation).
     */
-  private def tsCols(rawTs: Column): Seq[Column] = Seq(
-    rawTs.try_cast("long").as("ts"),
-    (rawTs.try_cast("decimal(21,9)") * lit(1000000000L)).try_cast("long").as("arrival"))
+  def malformedCount(lines: DataFrame): Long = malformed(markLines(lines))
 
   /** Frame cap matching the reference pickle receiver's MAX_LENGTH = 2<<20
     * (rurouni/protocols.py:46).
@@ -73,45 +51,80 @@ object Ingest {
     * individually (the reference's per-datapoint try/except). Frames over
     * MaxFrameBytes are rejected.
     */
-  def parseFrames(frames: DataFrame): DataFrame =
-    frames
-      .where(length(col("frame")) <= MaxFrameBytes)
-      .select(explode(from_json(col("frame"), frameSchema)).as("p"))
-      .select(
-        col("p.metric").as("metric"),
-        col("p.ts").as("raw_ts"),
-        col("p.value").as("value"))
-      .where(col("metric").isNotNull && col("raw_ts").isNotNull && col("value").isNotNull)
-      .select(col("metric") +: tsCols(col("raw_ts")) :+ col("value"): _*)
-      .where(col("ts").isNotNull && col("arrival").isNotNull)
-      .select(col("metric"), col("ts"), col("value"), col("arrival"))
+  def parseFrames(frames: DataFrame): DataFrame = valid(markFrames(frames))
 
   /** Count of dropped frames (unparseable or oversized) in a batch. */
-  def malformedFrameCount(frames: DataFrame): Long =
-    frames.where(
-      length(col("frame")) > MaxFrameBytes ||
-        from_json(col("frame"), frameSchema).isNull)
-      .count()
+  def malformedFrameCount(frames: DataFrame): Long = malformed(markFrames(frames))
 
-  /** Count of malformed lines in a batch (the reference logs+counts them;
-    * we surface the same signal for instrumentation).
+  private def isFrame: Column = trim(col("line")).startsWith("[")
+
+  /** Lines parse as line protocol; `[`-prefixed rows parse as JSON frames. */
+  def parseMixed(src: DataFrame): DataFrame = valid(markMixed(src))
+
+  def malformedMixedCount(src: DataFrame): Long = malformed(markMixed(src))
+
+  private def markLines(lines: DataFrame): DataFrame = marked(lines, col("line"), lit(false))
+  private def markFrames(frames: DataFrame): DataFrame = marked(frames, col("frame"), lit(true))
+  private def markMixed(src: DataFrame): DataFrame = marked(src, trim(col("line")), isFrame)
+
+  private def valid(marked: DataFrame): DataFrame = marked.where(col("metric").isNotNull)
+  private def malformed(marked: DataFrame): Long = marked.where(col("metric").isNull).count()
+
+  /** The one parse behind every protocol: each input row is a line or,
+    * where `frame` holds, a JSON-array frame. Output: one row
+    * `(metric, ts, value, arrival)` per parsed point, plus one row with a
+    * null `metric` per malformed line or dropped frame, so a batch's
+    * points and its error count come out of the same scan. An invalid
+    * entry inside a valid frame drops without a mark, as in the reference.
+    *
+    * Every conversion is a try_cast, never a plain cast: under ANSI mode
+    * (Spark 4 default) a plain cast would kill the stream on the first
+    * malformed number, and `get`, not `getItem`, reads the fields, since an
+    * out-of-bounds `getItem` throws under ANSI mode even where the size
+    * check would have ruled the line out.
     */
-  def malformedCount(lines: DataFrame): Long = {
-    val parts = split(trim(col("line")), "\\s+")
-    // get(), not getItem(): the conditions share subexpressions, and under
-    // ANSI mode an out-of-bounds getItem throws even when the size
-    // predicate would have short-circuited it
-    val rawTs = get(col("p"), lit(2)).try_cast("double")
-    lines.withColumn("p", parts)
-      .where(size(col("p")) =!= 3 ||
-        get(col("p"), lit(1)).try_cast("double").isNull ||
-        rawTs.isNull ||
-        // overflow class: parses as a double but can't convert to an
-        // epoch-seconds long / ns arrival (NaN, Infinity, ms-epochs)
-        rawTs.try_cast("long").isNull ||
-        (rawTs.try_cast("decimal(21,9)") * lit(1000000000L)).try_cast("long").isNull)
-      .count()
+  private def marked(src: DataFrame, text: Column, frame: Column): DataFrame = {
+    // one projection per step: each intermediate is a column the next step
+    // reads, so the split, the JSON parse and the casts run once per row
+    // rather than once per expression that uses them
+    val fields = src.select(frame.as("frame"), text.as("text"))
+      .select(col("frame"),
+        // an oversized frame drops unparsed
+        when(col("frame") && length(col("text")) <= MaxFrameBytes,
+          from_json(col("text"), frameSchema)).as("json"),
+        when(!col("frame"), split(trim(col("text")), "\\s+")).as("parts"))
+      .select(col("frame"), col("json"), size(col("parts")).as("fields"),
+        get(col("parts"), lit(0)).as("metric"),
+        get(col("parts"), lit(1)).try_cast("double").as("value"),
+        get(col("parts"), lit(2)).try_cast("double").as("ts"))
+    val lineOk = col("fields") === 3 && col("value").isNotNull && col("ts").isNotNull &&
+      // overflow class: parses as a double but can't convert to an
+      // epoch-seconds long / ns arrival (NaN, Infinity, ms-epochs)
+      tsCol(col("ts")).isNotNull && arrivalCol(col("ts")).isNotNull
+    val linePoint = array(struct(col("metric"), col("ts"), col("value")))
+    fields.select(col("frame"), col("json"), linePoint.as("line"),
+        when(col("frame"), col("json").isNull).otherwise(!lineOk).as("bad"))
+      // a bad row explodes to one null point: its mark
+      .select(col("bad"),
+        explode_outer(when(!col("bad"), when(col("frame"), col("json")).otherwise(col("line")))).as("p"))
+      .select(col("bad"), col("p.metric").as("metric"), tsCol(col("p.ts")).as("ts"),
+        col("p.value").as("value"), arrivalCol(col("p.ts")).as("arrival"))
+      .where(col("bad") || (col("metric").isNotNull && col("value").isNotNull &&
+        col("ts").isNotNull && col("arrival").isNotNull))
+      .select(col("metric"), col("ts"), col("value"), col("arrival"))
   }
+
+  /** ts + arrival conversion, overflow-safe end to end: try_cast (never
+    * plain cast) so a NaN/Infinity/out-of-range timestamp — e.g. an
+    * ms-epoch where seconds were expected, which exceeds decimal(21,9) —
+    * nulls out and drops as malformed instead of throwing under ANSI mode
+    * and killing the stream. Decimal, not double, math for arrival:
+    * ts*1e9 exceeds the 52-bit double mantissa and would round the
+    * tiebreaker.
+    */
+  private def tsCol(rawTs: Column): Column = rawTs.try_cast("long")
+  private def arrivalCol(rawTs: Column): Column =
+    (rawTs.try_cast("decimal(21,9)") * lit(1000000000L)).try_cast("long")
 
   /** Start a streaming ingest from a line DataFrame (socket source in dev,
     * Kafka in prod — both yield a string column we alias to `line`) into the
@@ -124,7 +137,7 @@ object Ingest {
   def start(lines: DataFrame, hot: HotCache, checkpoint: String,
             nowFn: () => Long = () => System.currentTimeMillis() / 1000,
             instr: Option[Instrumentation] = None)(implicit spark: SparkSession): StreamingQuery =
-    startWith(lines, hot, checkpoint, nowFn, instr, parseLines, malformedCount)
+    startWithRouted(lines, Seq((hot.store.schema, hot)), checkpoint, nowFn, instr, markLines)
 
   /** Framed-batch streaming ingest (the pickle listener analog): same hot
     * path, frames instead of lines.
@@ -132,7 +145,7 @@ object Ingest {
   def startFrames(frames: DataFrame, hot: HotCache, checkpoint: String,
                   nowFn: () => Long = () => System.currentTimeMillis() / 1000,
                   instr: Option[Instrumentation] = None)(implicit spark: SparkSession): StreamingQuery =
-    startWith(frames, hot, checkpoint, nowFn, instr, parseFrames, malformedFrameCount)
+    startWithRouted(frames, Seq((hot.store.schema, hot)), checkpoint, nowFn, instr, markFrames)
 
   /** Mixed-protocol ingest: ONE stream carrying both newline line-protocol
     * records and JSON-array frames (a row starting with `[` is a frame).
@@ -144,19 +157,7 @@ object Ingest {
   def startMixed(src: DataFrame, hot: HotCache, checkpoint: String,
                  nowFn: () => Long = () => System.currentTimeMillis() / 1000,
                  instr: Option[Instrumentation] = None)(implicit spark: SparkSession): StreamingQuery =
-    startWith(src, hot, checkpoint, nowFn, instr, parseMixed, malformedMixedCount)
-
-  private def isFrame: Column = trim(col("line")).startsWith("[")
-
-  /** Lines parse as line protocol; `[`-prefixed rows parse as JSON frames. */
-  def parseMixed(src: DataFrame): DataFrame =
-    parseLines(src.where(!isFrame))
-      .unionByName(parseFrames(src.where(isFrame)
-        .select(trim(col("line")).as("frame"))))
-
-  def malformedMixedCount(src: DataFrame): Long =
-    malformedCount(src.where(!isFrame)) +
-      malformedFrameCount(src.where(isFrame).select(trim(col("line")).as("frame")))
+    startWithRouted(src, Seq((hot.store.schema, hot)), checkpoint, nowFn, instr, markMixed)
 
   /** Mixed-protocol ingest routed over MULTIPLE storage schemas: one stream,
     * one writer, points assigned to the FIRST schema whose pattern matches
@@ -164,8 +165,8 @@ object Ingest {
     * (rurouni/storage.py:152-180,200-204) as a single codegen'd CASE over
     * the batch. Points matching NO schema are dropped (the caller appends a
     * catch-all default route for reference fidelity — Daemon.main does).
-    */
-  /** @param postBatch maintenance hook invoked after every micro-batch's
+    *
+    * @param postBatch maintenance hook invoked after every micro-batch's
     *   routes have processed (same thread as the writes — the level tables
     *   have ONE writer, so cascade/TTL work must interleave here, never
     *   run from a side thread racing the flush). The daemon passes its
@@ -176,8 +177,7 @@ object Ingest {
                        nowFn: () => Long = () => System.currentTimeMillis() / 1000,
                        instr: Option[Instrumentation] = None,
                        postBatch: Option[Long => Unit] = None)(implicit spark: SparkSession): StreamingQuery =
-    startWithRouted(src, targets, checkpoint, nowFn, instr, parseMixed,
-      malformedMixedCount, postBatch)
+    startWithRouted(src, targets, checkpoint, nowFn, instr, markMixed, postBatch)
 
   /** First-match schema index over `metric`: `rlike("^(?:p)")` is exactly
     * `Pattern.lookingAt` — anchored at the start, unanchored at the end —
@@ -190,19 +190,21 @@ object Ingest {
         .otherwise(fallback)
     }
 
-  private def startWith(src: DataFrame, hot: HotCache, checkpoint: String,
-                        nowFn: () => Long, instr: Option[Instrumentation],
-                        parse: DataFrame => DataFrame,
-                        countBad: DataFrame => Long)(implicit spark: SparkSession): StreamingQuery =
-    // single-target: the schema is never consulted (no route column, no
-    // extra filter — the plan is identical to the pre-routing design)
-    startWithRouted(src, Seq((hot.store.schema, hot)), checkpoint, nowFn, instr, parse, countBad)
-
+  /** The stream behind every `start*`: each micro-batch is ONE plan over
+    * every route ([[HotCache.processRouted]]): the batch parses once, with
+    * its malformed rows marked rather than counted by a second scan, then
+    * routes, admits, aligns and resolves last-write-wins for every schema
+    * in one cached plan. One aggregate job over that plan yields every
+    * per-batch figure, and the writes it shows are needed follow: hot
+    * appends, level upserts, hot swaps. A route idle this batch costs
+    * nothing until the watermark passes its oldest hot slot. The
+    * instrumentation counters read the aggregate, so attaching them costs
+    * no job.
+    */
   private def startWithRouted(src: DataFrame, targets: Seq[(StorageSchema, HotCache)],
                               checkpoint: String,
                               nowFn: () => Long, instr: Option[Instrumentation],
                               parse: DataFrame => DataFrame,
-                              countBad: DataFrame => Long,
                               postBatch: Option[Long => Unit] = None): StreamingQuery =
     src.writeStream
       .outputMode("append")
@@ -210,33 +212,14 @@ object Ingest {
       .trigger(Trigger.ProcessingTime("5 seconds"))
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val t0 = System.nanoTime()
-        val points = parse(batch).cache()
-        try {
-          // counters only cost extra jobs when instrumentation is attached
-          instr.foreach { ins =>
-            ins.incr("metricReceived", points.count().toDouble)
-            ins.incr("errors", countBad(batch).toDouble)
-          }
-          val committed =
-            if (targets.lengthCompare(1) == 0) targets.head._2.processBatch(points, nowFn())
-            else {
-              val routed = points.withColumn("__route", routeIndex(targets.map(_._1))).cache()
-              // every route's processBatch runs even on an empty slice: the
-              // watermark flush must advance for schemas idle this batch
-              try targets.zipWithIndex.map { case ((_, hot), i) =>
-                hot.processBatch(routed.where(col("__route") === i).drop("__route"), nowFn())
-              }.sum
-              finally { routed.unpersist(); () }
-            }
-          instr.foreach { ins =>
-            // post-admission count: throttled/mis-routed/dropped points are
-            // NOT committed (parse-side points.count() would overstate)
-            ins.incr("committedPoints", committed.toDouble)
-            ins.appendUpdateTime((System.nanoTime() - t0) / 1e9)
-          }
-        } finally {
-          points.unpersist()
-          ()
+        val counts = HotCache.processRouted(parse(batch), targets, nowFn())
+        instr.foreach { ins =>
+          ins.incr("metricReceived", counts.received.toDouble)
+          ins.incr("errors", counts.malformed.toDouble)
+          // post-admission count: throttled/mis-routed/dropped points are
+          // NOT committed (the parse-side count would overstate)
+          ins.incr("committedPoints", counts.committed.toDouble)
+          ins.appendUpdateTime((System.nanoTime() - t0) / 1e9)
         }
         postBatch.foreach(f => f(nowFn()))
       }

@@ -1,16 +1,17 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Engine self-metrics re-ingested as `rurouni.*`-style series (reference:
   * rurouni/state/instrumentation.py:66-113 — per-interval counters drained
   * into the cache under `<prefix>.<host>.<instance>.<stat>`).
   *
-  * Counters accumulate between `recordMetrics` calls and reset on drain,
-  * exactly like the reference's `stats.clear()`. The StreamingQueryListener
-  * feeds batch-level numbers (rows/sec, batch durations) from Structured
-  * Streaming progress events — the engine monitors itself with itself.
+  * Counters accumulate between drains and reset on each, exactly like the
+  * reference's `stats.clear()`; the daemon re-ingests the drained points
+  * through its own ingest stream (`Daemon.recordSelfMetrics`). The
+  * StreamingQueryListener feeds batch-level numbers (rows/sec, batch
+  * durations) from Structured Streaming progress events — the engine
+  * monitors itself with itself.
   */
 final class Instrumentation(prefix: String = "rurouni",
                             hostname: String = java.net.InetAddress.getLocalHost.getHostName.replace('.', '_'),
@@ -46,17 +47,6 @@ final class Instrumentation(prefix: String = "rurouni",
     out.toSeq.map { case (stat, v) => (metricName(stat), now, v, now * 1000000000L) }
   }
 
-  /** Drain and write the self-metrics through the normal ingest path —
-    * they land in the store/cache like any other series (cache_record,
-    * rurouni/state/instrumentation.py:103-113).
-    */
-  def recordMetrics(hot: HotCache, now: Long)(implicit spark: SparkSession): Unit = {
-    import spark.implicits._
-    val pts = drain(now)
-    if (pts.nonEmpty)
-      hot.processBatch(pts.toDF("metric", "ts", "value", "arrival"), now)
-  }
-
   /** Structured Streaming hook: batch-level stats from progress events
     * (the reference's event observers, rurouni/state/events.py:8-37).
     */
@@ -65,9 +55,10 @@ final class Instrumentation(prefix: String = "rurouni",
     override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
     override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
       // timing only — metricReceived is counted in exactly one place
-      // (Ingest.startWith's foreachBatch, post-parse): counting
-      // numInputRows here too would double-count when both are wired, and
-      // pre-parse input rows disagree with parsed points anyway
+      // (Ingest.startWithRouted's foreachBatch, from the batch's
+      // aggregate): counting numInputRows here too would double-count
+      // when both are wired, and pre-parse input rows disagree with
+      // parsed points anyway
       Option(e.progress.durationMs.get("triggerExecution"))
         .foreach(ms => appendUpdateTime(ms.toDouble / 1000))
     }

@@ -178,7 +178,8 @@ class IngestSpec extends AnyFunSuite with BeforeAndAfterAll {
     // a flush lands between planning and running: it swaps the same day
     // of level 0 (rewriting one slot), so the listed files are gone
     val planned = plan()
-    store.upsertSlots(0, Seq((m, now - 300, 7.0, 2L)).toDF("metric", "ts", "value", "arrival"))
+    store.upsertSlots(0, Seq((m, now - 300, 7.0, 2L)).toDF("metric", "ts", "value", "arrival"),
+      now - 300, now - 300)
     assert(SnapshotRead.stale(planned))
     val rows = SnapshotRead.collect(planned)(plan())
     assert(rows.length == 300 && nonNull(rows) == 280, s"${nonNull(rows)} non-null slots")

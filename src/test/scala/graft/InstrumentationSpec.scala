@@ -2,7 +2,7 @@ package graft
 
 import graft.core.{AggMethod, Archive, StorageSchema}
 import graft.storage.MetricStore
-import graft.streaming.{HotCache, Ingest, Instrumentation}
+import graft.streaming.{Ingest, Instrumentation}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -44,18 +44,6 @@ class InstrumentationSpec extends AnyFunSuite with BeforeAndAfterAll {
     val next = ins.drain(1700000060L).map(p => p._1 -> p._3).toMap
     assert(next("rurouni.testhost.0.metricReceived") == 0.0)
     assert(!next.contains("rurouni.testhost.0.avgUpdateTime"))
-  }
-
-  test("recordMetrics lands self-metrics in the store like any series") {
-    val store = new MetricStore(s"$root/im", schema("im", Seq(Archive(10, 360), Archive(60, 1440))))
-    val hot = new HotCache(store, 600, 0)
-    val ins = new Instrumentation(hostname = "h", instance = "1")
-    val now = 1700003600L
-    ins.incr("metricReceived", 7)
-    ins.recordMetrics(hot, now)
-    val got = hot.hotView().where(col("metric") === "rurouni.h.1.metricReceived")
-      .as[(String, Long, Double)].collect()
-    assert(got.length == 1 && got.head._3 == 7.0)
   }
 
   test("framed-batch source parses frames, drops invalid/oversized whole (protocols.py:45-62)") {

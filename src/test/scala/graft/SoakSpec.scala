@@ -176,7 +176,7 @@ class SoakSpec extends AnyFunSuite with BeforeAndAfterAll {
           struct(lit("soak.b").as("metric"), col("ts"),
             ((col("ts") + lit((step - 10) / 2.0)) * 0.5).as("value")))).as("p"))
         .select(col("p.metric"), col("p.ts"), col("p.value"), col("p.ts").as("arrival"))
-      store.upsertSlots(level, pts)
+      store.upsertSlots(level, pts, lo / step * step, (SimEnd6 / step - 1) * step)
     }
     seed(2, 9)     // 300s:7d   + 2 days over
     seed(3, 210)   // 15m:25w   + ~35 days over
