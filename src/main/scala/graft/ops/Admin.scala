@@ -98,9 +98,7 @@ object Admin {
         // finer levels get a larger arrival bonus: when two old levels land
         // in the same new slot, the finer one wins the LWW tie-break
         val arrival = (col("ts") * levels + lit(levels - 1 - i)).as("arrival")
-        // the rows are one per slot of the old level's step already
-        fresh.writeBatch(rows.select(col("metric"), col("ts"), col("value"), arrival), now,
-          alignedStep = old.archives(i).secondsPerPoint)
+        fresh.writeBatch(rows.select(col("metric"), col("ts"), col("value"), arrival), now)
         ()
       }
     }

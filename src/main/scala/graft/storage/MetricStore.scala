@@ -82,14 +82,10 @@ final class MetricStore(val root: String, val schema: StorageSchema,
     * kenshin/storage.py:397-419), drop points older than everything, append
     * each slice to its level table, and record the written window in the
     * level's dirty state for the cascade. Returns the number of dropped
-    * too-old points.
-    *
-    * `alignedStep`: the points are already aligned and LWW-resolved at this
-    * step, so a level with the same step takes them as they are instead of
-    * deduplicating them a second time (0: raw points).
+    * too-old points. The streaming path writes through [[upsertSlots]]
+    * instead ([[graft.streaming.HotCache.processRouted]]).
     */
-  def writeBatch(points: DataFrame, now: Long, upsert: Boolean = false,
-                 alignedStep: Int = 0): Long = {
+  def writeBatch(points: DataFrame, now: Long): Long = {
     val routed = TimeSeries.ageRoute(points, archives, now).cache()
     try {
       // one small pass for per-level counts + written ts window (the dirty
@@ -100,18 +96,12 @@ final class MetricStore(val root: String, val schema: StorageSchema,
       archives.indices.filter(i => stats.get(i).exists(_._1 > 0)).foreach { i =>
         val step = archives(i).secondsPerPoint
         val slice = routed.where(col("level") === i).drop("level")
-        val deduped =
-          if (step == alignedStep) slice else TimeSeries.alignDedup(slice, step, col("arrival"))
         val (_, lo, hi) = stats(i)
-        val (alignedLo, alignedHi) = (floorTo(lo, step), floorTo(hi, step))
-        if (upsert) upsertSlots(i, deduped, alignedLo, alignedHi)
-        else {
-          recordWrite(i, alignedLo, alignedHi)
-          withPday(deduped).write
-            .mode(SaveMode.Append)
-            .partitionBy("pday")
-            .parquet(levelPath(i))
-        }
+        recordWrite(i, floorTo(lo, step), floorTo(hi, step))
+        withPday(TimeSeries.alignDedup(slice, step, col("arrival"))).write
+          .mode(SaveMode.Append)
+          .partitionBy("pday")
+          .parquet(levelPath(i))
       }
       stats.get(-1).map(_._1).getOrElse(0L)
     } finally {

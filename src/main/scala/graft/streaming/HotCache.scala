@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.core.StorageSchema
 import graft.storage.{Catalog, MetricStore, TimeSeries}
-import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The streaming hot cache — the reference's in-memory FileCache re-based on
@@ -28,10 +28,10 @@ import org.apache.spark.sql.functions._
   * aggregate over the table sets it the first time it is needed (and again
   * after anything else swaps the table: a crash recovery, an admin
   * delete); every append widens it from the batch's own figures; every
-  * flush resets it to the oldest slot the flush kept, observed during the
-  * flush's own write. So a flush runs no job, listing or persist until the
-  * boundary passes the oldest hot slot, and a route idle this batch costs
-  * nothing.
+  * flush moves its low bound up to the flush's boundary, below which no
+  * slot is kept, and empties it once the boundary has passed the high
+  * bound. So a flush runs no job, listing or persist until the boundary
+  * passes the low bound, and a route idle this batch costs nothing.
   *
   * Scale posture: the hot table is a bounded working set
   * (≈ metrics × cacheRetention/step rows) partitioned by pday; appends are
@@ -110,7 +110,7 @@ final class HotCache(val store: MetricStore, val cacheRetention: Long, val waitT
   }
 
   /** The raw hot rows below `boundary` with bounds of their ts, or None,
-    * without a job, while the boundary has not passed the oldest hot slot.
+    * without a job, while the boundary has not passed the span's low bound.
     */
   private def closedBelow(boundary: Long): Option[(DataFrame, Long, Long)] =
     hotSpan().filter(_._1 < boundary).map { case (lo, hi) =>
@@ -119,22 +119,18 @@ final class HotCache(val store: MetricStore, val cacheRetention: Long, val waitT
     }
 
   /** Drop the slots below `boundary` from the hot table, through the
-    * store's crash-safe per-day backup swap of every hot day, and reset the
-    * span to the oldest slot kept. A crash between the level upsert and
-    * this swap just leaves the flushed slots in both places — LWW replay
-    * converges; a crash inside the swap is recovered by recoverSwap, losing
-    * no committed slot either way.
+    * store's crash-safe per-day backup swap of every hot day. Every slot
+    * kept is at or above the boundary, so the span's low bound moves up to
+    * it, and a boundary past the high bound leaves no slot. A crash between
+    * the level upsert and this swap just leaves the flushed slots in both
+    * places — LWW replay converges; a crash inside the swap is recovered by
+    * recoverSwap, losing no committed slot either way.
     */
   private def dropBelow(boundary: Long): Unit = synchronized {
     span.flatten.foreach { case (lo, hi) =>
-      val kept = Observation()
-      val keep = TimeSeries.lwwMerge(rawHot().where(col("ts") >= boundary))
-        .observe(kept, min(col("ts")).as("oldest"))
-      store.swapPartitions(hotPath, lo / 86400L, hi / 86400L, keep)
-      // an observation that never arrives leaves the span to be read again
-      val oldest = scala.util.Try(scala.concurrent.Await.result(kept.future,
-        scala.concurrent.duration.Duration(30, "s"))).toOption
-      span = oldest.map(r => if (r.isNullAt(0)) None else Some((r.getLong(0), hi)))
+      store.swapPartitions(hotPath, lo / 86400L, hi / 86400L,
+        TimeSeries.lwwMerge(rawHot().where(col("ts") >= boundary)))
+      span = Some(if (hi < boundary) None else Some((boundary, hi)))
       spanGeneration = MetricStore.swapGeneration(hotPath)
     }
   }
@@ -232,9 +228,6 @@ object HotCache {
     */
   final case class BatchCounts(received: Long, malformed: Long, committed: Long)
 
-  /** Rows one task of a batch's write takes. */
-  private val RowsPerTask = 1L << 20
-
   // where an aligned row goes: a level index, or one of these
   private val Hot = -2
   private val Dropped = -1
@@ -324,14 +317,9 @@ object HotCache {
           val gated = plan.join(broadcast(rejected.reduce(_ unionByName _)), Seq("metric"), "left_anti")
           (gated, figures(gated))
         }
-      // the plan keeps the batch's shuffle partitions, most of them holding
-      // a few rows of each slice: read each slice in as many tasks as its
-      // size needs, so a hot append writes that many files, not one per
-      // partition
       def rows(r: Int, d: Int): Option[(DataFrame, Long, Long)] = figs.slices.get((r, d)).map { s =>
         (admitted.where(col("route") === r && col("dest") === d)
-          .select(col("metric"), col("ts"), col("value"), col("arrival"))
-          .coalesce((s.rows / RowsPerTask + 1).toInt), s.lo, s.hi)
+          .select(col("metric"), col("ts"), col("value"), col("arrival")), s.lo, s.hi)
       }
       write(hots.indices.map { r =>
         val levels = hots(r).store.archives.indices

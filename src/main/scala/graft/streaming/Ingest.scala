@@ -197,7 +197,7 @@ object Ingest {
     * in one cached plan. One aggregate job over that plan yields every
     * per-batch figure, and the writes it shows are needed follow: hot
     * appends, level upserts, hot swaps. A route idle this batch costs
-    * nothing until the watermark passes its oldest hot slot. The
+    * nothing until the watermark passes the low bound of its hot slots. The
     * instrumentation counters read the aggregate, so attaching them costs
     * no job.
     */

@@ -169,8 +169,8 @@ class IngestSpec extends AnyFunSuite with BeforeAndAfterAll {
     val m = "bench.sum.g3.s07"
     catalog.admit(Seq((m, now, 0.0, 0L)).toDF("metric", "ts", "value", "arrival"), now).count()
     // 240 slots of history in level 0 and 40 hot slots after them
-    store.writeBatch((1 to 240).map(i => (m, now - 300 + i - 1, i.toDouble, 1L))
-      .toDF("metric", "ts", "value", "arrival"), now, upsert = true)
+    store.upsertSlots(0, (1 to 240).map(i => (m, now - 300 + i - 1, i.toDouble, 1L))
+      .toDF("metric", "ts", "value", "arrival"), now - 300, now - 61)
     hot.processBatch((1 to 40).map(i => (m, now - 60 + i - 1, 1000.0 + i, 1L))
       .toDF("metric", "ts", "value", "arrival"), now)
     def plan() = hot.fetchMerged(Some(m), now - 300, now, now).get._2

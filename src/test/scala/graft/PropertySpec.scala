@@ -90,14 +90,17 @@ class PropertySpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("writeBatch replay idempotence: upsert twice ≡ upsert once (3 seeds)") {
+  test("upsertSlots replay idempotence: upsert twice ≡ upsert once (3 seeds)") {
     (1L to 3L).foreach { seed =>
-      val pts = sample(seed).toDF("metric", "ts", "value", "arrival")
+      // level 0 has a 1 s step, so the raw points are aligned already
+      val raw = sample(seed)
+      val (lo, hi) = (raw.map(_._2).min, raw.map(_._2).max)
+      val pts = raw.toDF("metric", "ts", "value", "arrival")
       val once = new MetricStore(s"$root/up1-$seed", schema(s"u1$seed", AggMethod.Last))
-      once.writeBatch(pts, nowTs, upsert = true)
+      once.upsertSlots(0, pts, lo, hi)
       val twice = new MetricStore(s"$root/up2-$seed", schema(s"u2$seed", AggMethod.Last))
-      twice.writeBatch(pts, nowTs, upsert = true)
-      twice.writeBatch(pts, nowTs, upsert = true)
+      twice.upsertSlots(0, pts, lo, hi)
+      twice.upsertSlots(0, pts, lo, hi)
       val a = once.readLevel(0, 0, nowTs).as[(String, Long, Double)].collect().toSet
       val b = twice.readLevel(0, 0, nowTs).as[(String, Long, Double)].collect().toSet
       assert(a == b, s"seed $seed")

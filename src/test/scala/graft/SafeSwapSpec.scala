@@ -87,13 +87,13 @@ class SafeSwapSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("upsert replay after an interrupted swap converges (idempotent recovery)") {
     val store = new MetricStore(s"$root/c4", schema("c4"))
-    store.writeBatch(somePoints(5), nowTs, upsert = true)
+    store.upsertSlots(0, somePoints(5), nowTs - 5, nowTs - 1)
     val level0 = s"$root/c4/c4/level_0"
     val day = (nowTs - 5) / 86400L
     fs.mkdirs(new Path(s"$level0.__old"))
     assert(fs.rename(new Path(s"$level0/pday=$day"), new Path(s"$level0.__old/pday=$day")))
     // the streaming contract: re-run the same batch after the crash
-    store.writeBatch(somePoints(5), nowTs, upsert = true)
+    store.upsertSlots(0, somePoints(5), nowTs - 5, nowTs - 1)
     val Some((_, df)) = store.fetch(Some("m0"), nowTs - 5, nowTs, nowTs)
     val got = df.where(col("value").isNotNull)
       .select(col("ts"), col("value")).as[(Long, Double)].collect().toMap
