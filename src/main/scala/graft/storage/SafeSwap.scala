@@ -4,10 +4,9 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Crash-safe directory replacement: backup-swap, never delete-then-rename.
   *
-  * Protocol (same discipline as SketchStream.mergeBatch): the previous
-  * content renames ASIDE to `<dir>.__bak` before the staged content renames
-  * in, so a crash at any step leaves either the old or the new state on
-  * disk. `recover` is idempotent and cheap (one exists() probe when clean);
+  * Protocol: the previous content renames ASIDE to `<dir>.__bak` before
+  * the staged content renames in, so a crash at any step leaves either the
+  * old or the new state on disk. `recover` is idempotent and cheap (one exists() probe when clean);
   * call it before reading or mutating a swapped directory:
   *  - backup present, main missing  -> the swap died mid-flight: restore
   *    the backup (the writer re-runs; all writers using this are

@@ -6,22 +6,23 @@ import java.io.{BufferedReader, InputStreamReader}
 import java.net.{InetAddress, ServerSocket, Socket}
 import java.nio.charset.StandardCharsets
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** The runnable cache daemon — the analog of the reference's
   * `bin/rurouni-cache.py` service wiring (rurouni/service.py:27-52): ONE
-  * process that listens for line-protocol points on a TCP socket, parses
-  * and admits them through the streaming ingest into the hot cache,
-  * watermark-flushes closed slots into the archive cascade, and serves both
-  * the pre-flush cache view and the merged hot ∪ historical read over HTTP.
+  * process that listens for line-protocol points on a TCP socket, journals
+  * them, parses and admits them through the streaming ingest into the hot
+  * cache, watermark-flushes closed slots into the archive cascade, and
+  * serves both the pre-flush cache view and the merged hot ∪ historical
+  * read over HTTP.
   *
   * Wiring (each arrow is a component that exists and is specced on its own;
-  * the daemon is the missing one-process composition):
+  * the daemon is the one-process composition):
   * {{{
-  *   TCP line listener  ──>  MemoryStream[String] / spool journal
+  *   TCP line listener  ──>  spool journal (closed files in spoolDir)
   *       (protocols.MetricLineReceiver, service.py:31-45)
-  *   stream  ──Ingest.startMixedRouted──>  parse -> route -> admit -> HotCache
+  *   journal  ──file source──>  Ingest.startMixedRouted
+  *       parse -> route -> admit -> HotCache
   *       (cache service wiring, service.py:55-61; per-point schema routing,
   *        storage.py:152-180,200-204)
   *   HotCache  ──watermark flush──>  MetricStore cascade (level 0..n)
@@ -48,28 +49,27 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * HTTP endpoint): the ingest protocol edge is inherently a single
   * network endpoint in the reference deployment too. Parsing, alignment,
   * admission, cache maintenance, and flush all stay distributed Spark jobs;
-  * the listener only enqueues raw lines. At production scale the same
-  * daemon shape runs with the MemoryStream swapped for a Kafka source —
-  * `Ingest.startMixedRouted` is source-agnostic — and the listener retired.
-  */
-/** @param routes one (store, cacheRetention) per storage schema, consulted
+  * the listener only queues raw lines for the journal writer. In a broker
+  * deployment a broker source (Kafka) would replace the journal's
+  * `readStream` in [[start]] — `Ingest.startMixedRouted` takes any stream
+  * of `line` records — and the listener would retire.
+  *
+  * @param routes one (store, cacheRetention) per storage schema, consulted
   *   first-match in order; points matching no route's schema pattern drop
   *   (append a catch-all default route for reference fidelity — the CLI
   *   entrypoint does).
-  * @param spoolDir when set, lines are ALSO journaled to this directory
-  *   and the streaming source is Spark's file source over it instead of
-  *   the in-memory stream: the file source checkpoints consumed files, so
-  *   a restarted daemon with the same checkpoint resumes EXACTLY where it
-  *   stopped (the durability MemoryStream cannot give; the same property a
-  *   Kafka source provides in a full deployment). A SINGLE writer thread
+  * @param spoolDir the journal: every received line is written to a closed
+  *   file here, and the stream is Spark's file source over it. The file
+  *   source checkpoints consumed files, so a restarted daemon with the same
+  *   checkpoint resumes EXACTLY where it stopped. A SINGLE writer thread
   *   journals all connections' pending lines on a time/size cadence
-  *   (`spoolFlushMillis` / `spoolFlushBytes`), so journal file count is
-  *   bounded by wall-time — N drip-feed clients (1 pt/s held-open sockets,
-  *   the reference's bread-and-butter workload) share one file per tick
-  *   instead of creating one file per point, which would melt the file
-  *   source's directory listing long before data volume matters. The
-  *   reference batches its cache for cacheRetention seconds before any
-  *   I/O for exactly this reason (rurouni/writer.py:48-70).
+  *   ([[Daemon.SpoolFlushMillis]] / [[Daemon.SpoolFlushBytes]]), so journal
+  *   file count is bounded by wall-time — N drip-feed clients (1 pt/s
+  *   held-open sockets, the reference's bread-and-butter workload) share
+  *   one file per tick instead of creating one file per point, which would
+  *   melt the file source's directory listing long before data volume
+  *   matters. The reference batches its cache for cacheRetention seconds
+  *   before any I/O for exactly this reason (rurouni/writer.py:48-70).
   * @param bindInterface listen address for BOTH the line listener and the
   *   HTTP server — loopback by default (tests, co-located deployments);
   *   "0.0.0.0" to serve externally, the reference's
@@ -77,17 +77,15 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *   (conf/rurouni.conf.example:10-12).
   */
 final class Daemon(routes: Seq[Daemon.Route], waitTime: Long,
-                   checkpoint: String, linePort: Int = 0, httpPort: Int = 0,
+                   checkpoint: String, spoolDir: String,
+                   linePort: Int = 0, httpPort: Int = 0,
                    nowFn: () => Long = () => System.currentTimeMillis() / 1000,
                    instr: Option[Instrumentation] = None,
                    metricInterval: Long = 60L,
-                   spoolDir: Option[String] = None,
                    bindInterface: String = "127.0.0.1",
-                   spoolFlushMillis: Long = 1000L,
-                   spoolFlushBytes: Long = 64L * 1024,
-                   bus: Option[BusSource] = None,
                    maintenanceInterval: Long = 0L)
                   (implicit spark: SparkSession) {
+  import Daemon.{SpoolFlushBytes, SpoolFlushMillis}
   require(routes.nonEmpty, "daemon needs at least one schema route")
 
   val hots: Seq[HotCache] =
@@ -128,7 +126,6 @@ final class Daemon(routes: Seq[Daemon.Route], waitTime: Long,
   private val httpServer = new CacheQueryServer(hots, httpPort, instr, bindInterface)
   private var listener: ServerSocket = _
   private var ingest: StreamingQuery = _
-  private var mem: MemoryStream[String] = _
   private var selfMetricsThread: Thread = _
   private var spoolWriter: Thread = _
   @volatile private var running = false
@@ -139,29 +136,15 @@ final class Daemon(routes: Seq[Daemon.Route], waitTime: Long,
     */
   def start(): (Int, Int) = synchronized {
     require(!running, "daemon already running")
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    implicit val enc: org.apache.spark.sql.Encoder[String] =
-      org.apache.spark.sql.Encoders.STRING
-    // transport seam: an explicit bus (e.g. BusSource.Kafka in a broker
-    // deployment, where the TCP listener is retired) wins; otherwise the
-    // spool journal (durable) or an in-memory stream (non-durable), both
-    // expressed through the same BusSource contract.
-    //
-    // Memory mode is TEST/DEV-ONLY, not a production transport: every line
-    // funnels through one lock-serialized MemoryStream.addData row-encode
-    // on the driver (the lock is correctness-required — see enqueue), so
-    // it measures ~half the spool path's throughput (28.5k vs 60.4k pts/s
-    // at 400k x 8, 54.1k vs 92.2k at 1M x 32 — bench/STREAMLANE_r12.md)
-    // and loses buffered lines on crash. Spool is the production default;
-    // the gap is the test source's encoder, not a daemon bottleneck.
-    val lines = bus.getOrElse {
-      spoolDir match {
-        case Some(dir) => BusSource.Journal(dir)
-        case None =>
-          mem = MemoryStream[String]
-          BusSource.Memory(mem)
-      }
-    }.lines(spark)
+    new java.io.File(spoolDir).mkdirs()
+    // consumed journal files are deleted once their micro-batch commits;
+    // `maxFileAge` is raised far above the file source's 7-day default,
+    // which would silently skip unprocessed journal files after a long
+    // downtime — the exact durability case the journal exists for
+    val lines = spark.readStream
+      .option("cleanSource", "delete")
+      .option("maxFileAge", "3650d")
+      .text(spoolDir).withColumnRenamed("value", "line")
     // mixed protocol: plain "metric value ts" lines AND JSON-array frames
     // (the pickle-receiver analog) on the same port, one stream, one writer,
     // routed first-match across the schema set
@@ -175,18 +158,17 @@ final class Daemon(routes: Seq[Daemon.Route], waitTime: Long,
     val t = new Thread(() => acceptLoop(), "graft-line-listener")
     t.setDaemon(true)
     t.start()
-    spoolDir.foreach { _ =>
-      // the one journal writer: drains every connection's pending lines to
-      // a single file per cadence tick (or sooner on the size trigger)
-      spoolWriter = new Thread(() => {
-        while (!writerStop) {
-          spoolLock.synchronized { if (!writerStop) spoolLock.wait(spoolFlushMillis) }
-          drainSpool()
-        }
-      }, "graft-spool-writer")
-      spoolWriter.setDaemon(true)
-      spoolWriter.start()
-    }
+    // the one journal writer: drains every connection's pending lines to
+    // a single file per cadence tick (or sooner on the size trigger); a
+    // failed write keeps its lines queued and waits out one whole tick
+    spoolWriter = new Thread(() => {
+      while (!writerStop) {
+        spoolLock.synchronized { if (!writerStop) spoolLock.wait(SpoolFlushMillis) }
+        if (!drainSpool() && !writerStop) Thread.sleep(SpoolFlushMillis)
+      }
+    }, "graft-spool-writer")
+    spoolWriter.setDaemon(true)
+    spoolWriter.start()
     // self-metrics loop (the reference's InstrumentationService: a
     // LoopingCall draining counters every RUROUNI_METRIC_INTERVAL,
     // rurouni/state/instrumentation.py:115-130): drained stats re-enter as
@@ -257,29 +239,20 @@ final class Daemon(routes: Seq[Daemon.Route], waitTime: Long,
     * for: bounded by wall-time/cadence, NOT by client count × point rate.
     */
   val spoolFilesWritten = new java.util.concurrent.atomic.AtomicLong(0L)
-  private val pending = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  private val pending = new java.util.concurrent.ConcurrentLinkedDeque[String]()
   private val pendingBytes = new java.util.concurrent.atomic.AtomicLong(0L)
   private val spoolLock = new Object
   private val drainLock = new Object
-  private val memLock = new Object
 
-  /** Hand a batch of raw lines to the stream: straight into the
-    * MemoryStream, or — in spool mode — onto the shared pending queue the
-    * single writer thread journals on its time/size cadence. Connection
-    * handlers never touch the filesystem.
+  /** Hand a batch of raw lines to the stream: onto the shared pending
+    * queue the single writer thread journals on its time/size cadence.
+    * Connection handlers never touch the filesystem.
     */
   private def enqueue(batch: Seq[String]): Unit =
-    if (batch.nonEmpty) spoolDir match {
-      // ONE addData per batch, under a daemon-side lock: MemoryStream is a
-      // test source whose row serializer is NOT safe for concurrent
-      // addData — two connection handlers flushing simultaneously corrupt
-      // the encode and die, silently losing every later line on their
-      // sockets (found by DaemonLoad: 3 of 4 connections' points vanished)
-      case None => memLock.synchronized { mem.addData(batch); () }
-      case Some(_) =>
-        batch.foreach(pending.add)
-        val sz = pendingBytes.addAndGet(batch.iterator.map(_.length + 1L).sum)
-        if (sz >= spoolFlushBytes) spoolLock.synchronized { spoolLock.notifyAll() }
+    if (batch.nonEmpty) {
+      batch.foreach(pending.add)
+      val sz = pendingBytes.addAndGet(batch.iterator.map(_.length + 1L).sum)
+      if (sz >= SpoolFlushBytes) spoolLock.synchronized { spoolLock.notifyAll() }
     }
 
   /** Journal every pending line as ONE atomically-renamed closed file (the
@@ -287,28 +260,38 @@ final class Daemon(routes: Seq[Daemon.Route], waitTime: Long,
     * lose lines; nanoTime+seq in the name keeps restarted daemons from
     * colliding with already-checkpointed file names). Serialized: the
     * cadence thread and an explicit processAllAvailable/stop drain never
-    * interleave half-batches.
+    * interleave half-batches. A write that fails puts its lines back at the
+    * head of the queue, in order, for the next drain, and logs the error;
+    * it never throws, so neither the writer thread nor [[stop]] dies on it.
+    *
+    * @return false when the journal write failed
     */
-  private def drainSpool(): Unit = spoolDir.foreach { dir =>
-    drainLock.synchronized {
-      val buf = new java.lang.StringBuilder
-      var n = 0
-      var line = pending.poll()
-      while (line != null) {
-        buf.append(line).append('\n')
-        pendingBytes.addAndGet(-(line.length + 1L))
-        n += 1
-        line = pending.poll()
-      }
-      if (n > 0) {
-        val name = s"batch-${System.nanoTime()}-${spoolSeq.incrementAndGet()}"
-        val tmp = new java.io.File(dir, s".$name.tmp")
-        java.nio.file.Files.write(tmp.toPath, buf.toString.getBytes(StandardCharsets.UTF_8))
-        if (!tmp.renameTo(new java.io.File(dir, s"$name.txt")))
+  private def drainSpool(): Boolean = drainLock.synchronized {
+    val lines = scala.collection.mutable.ArrayBuffer.empty[String]
+    var line = pending.poll()
+    while (line != null) {
+      lines += line
+      line = pending.poll()
+    }
+    val bytes = lines.iterator.map(_.length + 1L).sum
+    pendingBytes.addAndGet(-bytes)
+    lines.isEmpty || {
+      val name = s"batch-${System.nanoTime()}-${spoolSeq.incrementAndGet()}"
+      val tmp = new java.io.File(spoolDir, s".$name.tmp")
+      try {
+        java.nio.file.Files.write(tmp.toPath, lines.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
+        if (!tmp.renameTo(new java.io.File(spoolDir, s"$name.txt")))
           throw new java.io.IOException(s"spool rename failed for $name")
         spoolFilesWritten.incrementAndGet()
         instr.foreach(_.incr("spoolFilesWritten")) // journal-churn gauge
-        ()
+        true
+      } catch {
+        case scala.util.control.NonFatal(e) =>
+          lines.reverseIterator.foreach(pending.addFirst)
+          pendingBytes.addAndGet(bytes)
+          System.err.println(s"graft-daemon: journal write failed, " +
+            s"${lines.size} line(s) kept for the next drain: $e")
+          false
       }
     }
   }
@@ -319,9 +302,9 @@ final class Daemon(routes: Seq[Daemon.Route], waitTime: Long,
     * Lines batch per connection, flushed every SpoolBatch lines, at EOF,
     * AND whenever the reader has no more buffered input — a persistent
     * low-rate client (one carbon point every N seconds over a held-open
-    * socket) must not sit invisible in a half-full buffer. In spool mode
-    * the flush is a queue hand-off, not a file write, so this per-point
-    * eagerness stays cheap.
+    * socket) must not sit invisible in a half-full buffer. The flush is a
+    * queue hand-off, not a file write, so this per-point eagerness stays
+    * cheap.
     */
   private def handleConn(sock: Socket): Unit = {
     val SpoolBatch = 1000
@@ -360,9 +343,9 @@ final class Daemon(routes: Seq[Daemon.Route], waitTime: Long,
   }
 
   /** Deterministic drain for tests and ops probes: block until every line
-    * received so far has been parsed, admitted, and flushed-if-closed. In
-    * spool mode this force-journals pending lines first, so the cadence
-    * never delays a deterministic check.
+    * received so far has been parsed, admitted, and flushed-if-closed. This
+    * force-journals pending lines first, so the cadence never delays a
+    * deterministic check.
     */
   def processAllAvailable(): Unit = { drainSpool(); ingest.processAllAvailable() }
 
@@ -376,8 +359,7 @@ final class Daemon(routes: Seq[Daemon.Route], waitTime: Long,
     listener.close() // no new connections; accept loop exits
     // stop the self-metrics timer FIRST: interrupt exits its loop, so a
     // timed drain can never race past the final micro-batch and strand
-    // tail counters (memory mode drops them; spool mode delays them a
-    // whole restart)
+    // tail counters (they would wait in the journal for a restart)
     if (selfMetricsThread != null) {
       selfMetricsThread.interrupt()
       selfMetricsThread.join(5000L)
@@ -394,16 +376,14 @@ final class Daemon(routes: Seq[Daemon.Route], waitTime: Long,
     }
     if (!conns.isEmpty)
       System.err.println(s"graft-daemon: ${conns.size} connection handler(s) still " +
-        "live after 30s; their tail lines are lost (memory mode) or spooled for restart")
+        "live after 30s; lines they still read are lost")
     recordSelfMetrics() // tail counters ride the final micro-batch
     // park the spool writer (flag+notify, NOT interrupt: an interrupt
     // mid-Files.write would close the channel and lose polled lines),
     // then run the final drain on this thread
-    if (spoolWriter != null) {
-      writerStop = true
-      spoolLock.synchronized { spoolLock.notifyAll() }
-      spoolWriter.join(10000L)
-    }
+    writerStop = true
+    spoolLock.synchronized { spoolLock.notifyAll() }
+    spoolWriter.join(10000L)
     drainSpool()
     ingest.processAllAvailable()
     running = false // after the drain: late handler flushes still enqueued
@@ -441,6 +421,12 @@ object Daemon {
     * series one instance registers per minute.
     */
   val MaxCreatesPerMinute = 1000
+
+  /** The journal writer's cadence: pending lines become one spool file
+    * every `SpoolFlushMillis`, or sooner once `SpoolFlushBytes` are pending.
+    */
+  val SpoolFlushMillis = 1000L
+  val SpoolFlushBytes: Long = 64L * 1024
 
   /** The command line's catalog: one registry and one create throttle
     * shared by every schema — a bucket of MAX_CREATES_PER_MINUTE tokens
@@ -498,11 +484,8 @@ object Daemon {
     val instr = new Instrumentation()
     val daemon = new Daemon(
       stores.map(s => Route(s, s.schema.cacheRetention)),
-      waitTime = 10L, checkpoint = s"$root/_checkpoint",
+      waitTime = 10L, checkpoint = s"$root/_checkpoint", spoolDir = s"$root/_spool",
       linePort = linePort, httpPort = httpPort, instr = Some(instr),
-      // production default: journal through the spool so a restart resumes
-      // from the checkpoint instead of losing buffered lines
-      spoolDir = Some(s"$root/_spool"),
       bindInterface = bindInterface,
       // live-loop storage maintenance: cascade + TTL once a minute
       maintenanceInterval = 60L)

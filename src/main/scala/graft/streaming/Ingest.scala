@@ -1,37 +1,20 @@
 package graft.streaming
 
 import graft.core.StorageSchema
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming ingest of the Graphite line protocol `"metric value timestamp"`
-  * (reference: rurouni/protocols.py:31-42) re-based on Structured Streaming:
-  * socket/Kafka/file source -> parse (malformed lines dropped, not fatal) ->
-  * watermarked micro-batch -> align/dedupe -> level-0 append, with the
-  * watermark playing the reference's cacheRetention + DEFAULT_WAIT_TIME
-  * flush-delay role (rurouni/cache.py:259-262).
+  * (reference: rurouni/protocols.py:31-42) and of JSON-array frames (the
+  * pickle receiver, rurouni/protocols.py:45-62) re-based on Structured
+  * Streaming: one stream of raw records -> one parse (malformed records
+  * marked, never fatal) -> micro-batch -> route, admit, align, dedupe ->
+  * hot cache and level upserts, with the flush boundary playing the
+  * reference's cacheRetention + DEFAULT_WAIT_TIME flush-delay role
+  * (rurouni/cache.py:259-262). The daemon feeds it from its spool journal.
   */
 object Ingest {
-
-  /** Parse raw protocol lines into points. Bad lines (wrong field count,
-    * non-numeric value/ts) drop — the stream never dies on malformed input,
-    * matching the reference's drop+log.
-    * Output: (metric, ts epoch-seconds long, value double, arrival long).
-    *
-    * `arrival` (the LWW tiebreaker) is the raw event timestamp at nanosecond
-    * scale — stable across retries and repartitions, unlike a generated id
-    * whose high bits encode partition layout. Duplicates with identical raw
-    * timestamps tie; the store then deterministically keeps the larger
-    * value (TimeSeries.alignDedup). A Kafka source should pass its offset
-    * here instead for true write-order LWW.
-    */
-  def parseLines(lines: DataFrame): DataFrame = valid(markLines(lines))
-
-  /** Count of malformed lines in a batch (the reference logs+counts them;
-    * we surface the same signal for instrumentation).
-    */
-  def malformedCount(lines: DataFrame): Long = malformed(markLines(lines))
 
   /** Frame cap matching the reference pickle receiver's MAX_LENGTH = 2<<20
     * (rurouni/protocols.py:46).
@@ -41,41 +24,30 @@ object Ingest {
   private val frameSchema: org.apache.spark.sql.types.DataType =
     org.apache.spark.sql.types.DataType.fromDDL("array<struct<metric:string,ts:double,value:double>>")
 
-  /** Framed-batch source (the pickle receiver analog,
-    * rurouni/protocols.py:45-62): each row's `frame` column carries one
-    * batch of points as a JSON array `[{"metric":…,"ts":…,"value":…},…]`
-    * — Python pickle is not JVM-portable, so the Kafka payload format is
-    * JSON/Avro with identical framing semantics. Invalid frames are
-    * ignored whole (reference: "invalid pickle received … ignoring");
-    * within a valid frame, entries with missing/bad fields drop
-    * individually (the reference's per-datapoint try/except). Frames over
-    * MaxFrameBytes are rejected.
+  /** Parse raw protocol records (column `line`) into points
+    * `(metric, ts epoch-seconds long, value double, arrival long)`. Malformed
+    * records drop — the stream never dies on bad input, matching the
+    * reference's drop+log.
+    *
+    * `arrival` (the LWW tiebreaker) is the raw event timestamp at nanosecond
+    * scale — stable across retries and repartitions, unlike a generated id
+    * whose high bits encode partition layout. Duplicates with identical raw
+    * timestamps tie; the store then deterministically keeps the larger
+    * value (TimeSeries.alignDedup).
     */
-  def parseFrames(frames: DataFrame): DataFrame = valid(markFrames(frames))
+  def parseMixed(src: DataFrame): DataFrame = markMixed(src).where(col("metric").isNotNull)
 
-  /** Count of dropped frames (unparseable or oversized) in a batch. */
-  def malformedFrameCount(frames: DataFrame): Long = malformed(markFrames(frames))
-
-  private def isFrame: Column = trim(col("line")).startsWith("[")
-
-  /** Lines parse as line protocol; `[`-prefixed rows parse as JSON frames. */
-  def parseMixed(src: DataFrame): DataFrame = valid(markMixed(src))
-
-  def malformedMixedCount(src: DataFrame): Long = malformed(markMixed(src))
-
-  private def markLines(lines: DataFrame): DataFrame = marked(lines, col("line"), lit(false))
-  private def markFrames(frames: DataFrame): DataFrame = marked(frames, col("frame"), lit(true))
-  private def markMixed(src: DataFrame): DataFrame = marked(src, trim(col("line")), isFrame)
-
-  private def valid(marked: DataFrame): DataFrame = marked.where(col("metric").isNotNull)
-  private def malformed(marked: DataFrame): Long = marked.where(col("metric").isNull).count()
-
-  /** The one parse behind every protocol: each input row is a line or,
-    * where `frame` holds, a JSON-array frame. Output: one row
+  /** The one parse behind the stream and [[parseMixed]]: a row of `line`
+    * starting with `[` (after trimming) is a JSON-array frame
+    * `[{"metric":…,"ts":…,"value":…},…]`, any other row is one
+    * `metric value timestamp` line. Output: one row
     * `(metric, ts, value, arrival)` per parsed point, plus one row with a
     * null `metric` per malformed line or dropped frame, so a batch's
-    * points and its error count come out of the same scan. An invalid
-    * entry inside a valid frame drops without a mark, as in the reference.
+    * points and its error count come out of the same scan. A frame that
+    * does not parse, or is over [[MaxFrameBytes]], drops whole (reference:
+    * "invalid pickle received … ignoring"); an invalid entry inside a valid
+    * frame drops alone, without a mark (the reference's per-datapoint
+    * try/except).
     *
     * Every conversion is a try_cast, never a plain cast: under ANSI mode
     * (Spark 4 default) a plain cast would kill the stream on the first
@@ -83,16 +55,17 @@ object Ingest {
     * out-of-bounds `getItem` throws under ANSI mode even where the size
     * check would have ruled the line out.
     */
-  private def marked(src: DataFrame, text: Column, frame: Column): DataFrame = {
+  private[graft] def markMixed(src: DataFrame): DataFrame = {
     // one projection per step: each intermediate is a column the next step
     // reads, so the split, the JSON parse and the casts run once per row
     // rather than once per expression that uses them
-    val fields = src.select(frame.as("frame"), text.as("text"))
+    val fields = src.select(trim(col("line")).as("text"))
+      .select(col("text"), col("text").startsWith("[").as("frame"))
       .select(col("frame"),
         // an oversized frame drops unparsed
         when(col("frame") && length(col("text")) <= MaxFrameBytes,
           from_json(col("text"), frameSchema)).as("json"),
-        when(!col("frame"), split(trim(col("text")), "\\s+")).as("parts"))
+        when(!col("frame"), split(col("text"), "\\s+")).as("parts"))
       .select(col("frame"), col("json"), size(col("parts")).as("fields"),
         get(col("parts"), lit(0)).as("metric"),
         get(col("parts"), lit(1)).try_cast("double").as("value"),
@@ -126,46 +99,32 @@ object Ingest {
   private def arrivalCol(rawTs: Column): Column =
     (rawTs.try_cast("decimal(21,9)") * lit(1000000000L)).try_cast("long")
 
-  /** Start a streaming ingest from a line DataFrame (socket source in dev,
-    * Kafka in prod — both yield a string column we alias to `line`) into the
-    * hot cache: parse -> hot-cache merge -> watermark-gated idempotent
-    * flush to level 0 (HotCache.processBatch). Replayed micro-batches
-    * converge to the same state — effectively-once, the reference's
-    * write-after-delay + idempotent slot overwrite
-    * (rurouni/writer.py:33-45 + kenshin/storage.py:429-445).
-    */
-  def start(lines: DataFrame, hot: HotCache, checkpoint: String,
-            nowFn: () => Long = () => System.currentTimeMillis() / 1000,
-            instr: Option[Instrumentation] = None)(implicit spark: SparkSession): StreamingQuery =
-    startWithRouted(lines, Seq((hot.store.schema, hot)), checkpoint, nowFn, instr, markLines)
-
-  /** Framed-batch streaming ingest (the pickle listener analog): same hot
-    * path, frames instead of lines.
-    */
-  def startFrames(frames: DataFrame, hot: HotCache, checkpoint: String,
-                  nowFn: () => Long = () => System.currentTimeMillis() / 1000,
-                  instr: Option[Instrumentation] = None)(implicit spark: SparkSession): StreamingQuery =
-    startWithRouted(frames, Seq((hot.store.schema, hot)), checkpoint, nowFn, instr, markFrames)
-
-  /** Mixed-protocol ingest: ONE stream carrying both newline line-protocol
-    * records and JSON-array frames (a row starting with `[` is a frame).
-    * The reference daemon runs its line and pickle receivers side by side
-    * into one cache (rurouni/service.py:31-45); funneling both through one
+  /** The one stream entry: ONE stream carrying both line-protocol records
+    * and JSON-array frames, into the hot caches of every storage schema. The
+    * reference daemon runs its line and pickle receivers side by side into
+    * one cache (rurouni/service.py:31-45); funneling both through one
     * stream keeps the single-writer discipline — two streaming queries
-    * would race their micro-batches on the hot table.
-    */
-  def startMixed(src: DataFrame, hot: HotCache, checkpoint: String,
-                 nowFn: () => Long = () => System.currentTimeMillis() / 1000,
-                 instr: Option[Instrumentation] = None)(implicit spark: SparkSession): StreamingQuery =
-    startWithRouted(src, Seq((hot.store.schema, hot)), checkpoint, nowFn, instr, markMixed)
-
-  /** Mixed-protocol ingest routed over MULTIPLE storage schemas: one stream,
-    * one writer, points assigned to the FIRST schema whose pattern matches
-    * their metric name — the reference's per-point getSchema routing
-    * (rurouni/storage.py:152-180,200-204) as a single codegen'd CASE over
-    * the batch. Points matching NO schema are dropped (the caller appends a
-    * catch-all default route for reference fidelity — Daemon.main does).
+    * would race their micro-batches on the hot tables. Points go to the
+    * FIRST schema whose pattern matches their metric name — the
+    * reference's per-point getSchema routing
+    * (rurouni/storage.py:152-180,200-204); points matching NO schema drop
+    * (the caller appends a catch-all default route for reference fidelity
+    * — Daemon.main does).
     *
+    * Each micro-batch is ONE plan over every route
+    * ([[HotCache.processRouted]]): the batch parses once ([[markMixed]]),
+    * with its malformed rows marked rather than counted by a second scan,
+    * then routes, admits, aligns and resolves last-write-wins for every
+    * schema in one cached plan. One aggregate job over that plan yields
+    * every per-batch figure, and the writes it shows are needed follow: hot
+    * appends, level upserts, hot swaps. A route idle this batch costs
+    * nothing until the watermark passes the low bound of its hot slots. The
+    * instrumentation counters read the aggregate, so attaching them costs
+    * no job. Replayed micro-batches converge to the same state —
+    * effectively-once, the reference's write-after-delay + idempotent slot
+    * overwrite (rurouni/writer.py:33-45 + kenshin/storage.py:429-445).
+    *
+    * @param src streaming frame of raw records in a string column `line`
     * @param postBatch maintenance hook invoked after every micro-batch's
     *   routes have processed (same thread as the writes — the level tables
     *   have ONE writer, so cascade/TTL work must interleave here, never
@@ -176,43 +135,14 @@ object Ingest {
                        checkpoint: String,
                        nowFn: () => Long = () => System.currentTimeMillis() / 1000,
                        instr: Option[Instrumentation] = None,
-                       postBatch: Option[Long => Unit] = None)(implicit spark: SparkSession): StreamingQuery =
-    startWithRouted(src, targets, checkpoint, nowFn, instr, markMixed, postBatch)
-
-  /** First-match schema index over `metric`: `rlike("^(?:p)")` is exactly
-    * `Pattern.lookingAt` — anchored at the start, unanchored at the end —
-    * the semantics of StorageSchema.matches and of the reference's
-    * `re.match`. Unmatched metrics get -1.
-    */
-  def routeIndex(schemas: Seq[StorageSchema]): Column =
-    schemas.zipWithIndex.foldRight(lit(-1): Column) { case ((s, i), fallback) =>
-      when(col("metric").rlike("^(?:" + s.pattern.pattern.pattern + ")"), lit(i))
-        .otherwise(fallback)
-    }
-
-  /** The stream behind every `start*`: each micro-batch is ONE plan over
-    * every route ([[HotCache.processRouted]]): the batch parses once, with
-    * its malformed rows marked rather than counted by a second scan, then
-    * routes, admits, aligns and resolves last-write-wins for every schema
-    * in one cached plan. One aggregate job over that plan yields every
-    * per-batch figure, and the writes it shows are needed follow: hot
-    * appends, level upserts, hot swaps. A route idle this batch costs
-    * nothing until the watermark passes the low bound of its hot slots. The
-    * instrumentation counters read the aggregate, so attaching them costs
-    * no job.
-    */
-  private def startWithRouted(src: DataFrame, targets: Seq[(StorageSchema, HotCache)],
-                              checkpoint: String,
-                              nowFn: () => Long, instr: Option[Instrumentation],
-                              parse: DataFrame => DataFrame,
-                              postBatch: Option[Long => Unit] = None): StreamingQuery =
+                       postBatch: Option[Long => Unit] = None): StreamingQuery =
     src.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.ProcessingTime("5 seconds"))
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val t0 = System.nanoTime()
-        val counts = HotCache.processRouted(parse(batch), targets, nowFn())
+        val counts = HotCache.processRouted(markMixed(batch), targets, nowFn())
         instr.foreach { ins =>
           ins.incr("metricReceived", counts.received.toDouble)
           ins.incr("errors", counts.malformed.toDouble)
@@ -224,4 +154,15 @@ object Ingest {
         postBatch.foreach(f => f(nowFn()))
       }
       .start()
+
+  /** First-match schema index over `metric`: `rlike("^(?:p)")` is exactly
+    * `Pattern.lookingAt` — anchored at the start, unanchored at the end —
+    * the semantics of StorageSchema.matches and of the reference's
+    * `re.match`. Unmatched metrics get -1.
+    */
+  def routeIndex(schemas: Seq[StorageSchema]): Column =
+    schemas.zipWithIndex.foldRight(lit(-1): Column) { case ((s, i), fallback) =>
+      when(col("metric").rlike("^(?:" + s.pattern.pattern.pattern + ")"), lit(i))
+        .otherwise(fallback)
+    }
 }

@@ -55,7 +55,7 @@ final class Instrumentation(prefix: String = "rurouni",
     override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
     override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
       // timing only — metricReceived is counted in exactly one place
-      // (Ingest.startWithRouted's foreachBatch, from the batch's
+      // (Ingest.startMixedRouted's foreachBatch, from the batch's
       // aggregate): counting numInputRows here too would double-count
       // when both are wired, and pre-parse input rows disagree with
       // parsed points anyway

@@ -41,11 +41,11 @@ class DaemonSpec extends AnyFunSuite with BeforeAndAfterAll {
       else None
     val store = new MetricStore(s"$root/$name", schema, catalog)
     // flush boundary = Now - (120 + 30) = Now - 150 (10s-aligned).
-    // Checkpoint is unique per daemon instance: a MemoryStream source can't
-    // resume another stream's checkpoint (Kafka checkpoints can — that
-    // resume path is what production uses).
+    // Checkpoint and journal are unique per daemon instance, so each starts
+    // a fresh stream (the spool tests below restart against a shared pair)
+    val id = s"$root/$name-${System.nanoTime()}"
     new Daemon(Seq(Daemon.Route(store, 120L)), waitTime = 30L,
-      checkpoint = s"$root/$name-ckpt-${System.nanoTime()}", nowFn = () => Now)
+      checkpoint = s"$id-ckpt", spoolDir = s"$id-spool", nowFn = () => Now)
   }
 
   def send(port: Int, lines: Seq[String]): Unit = {
@@ -84,7 +84,7 @@ class DaemonSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq(Archive(Step, 720), Archive(60, 1440)), 600, 8)
     val store = new MetricStore(s"$root/maint", schema)
     val d = new Daemon(Seq(Daemon.Route(store, 120L)), waitTime = 30L,
-      checkpoint = s"$root/maint-ckpt-${System.nanoTime()}", nowFn = () => Now,
+      checkpoint = s"$root/maint-ckpt", spoolDir = s"$root/maint-spool", nowFn = () => Now,
       maintenanceInterval = 1L)
     val (linePort, _) = d.start()
     try {
@@ -205,7 +205,7 @@ class DaemonSpec extends AnyFunSuite with BeforeAndAfterAll {
     val store = new MetricStore(s"$root/selfm", schema)
     val instr = new graft.streaming.Instrumentation("rurouni", "testhost", "a")
     val d = new Daemon(Seq(Daemon.Route(store, 120L)), waitTime = 30L,
-      checkpoint = s"$root/selfm-ckpt-${System.nanoTime()}", nowFn = () => Now,
+      checkpoint = s"$root/selfm-ckpt", spoolDir = s"$root/selfm-spool", nowFn = () => Now,
       instr = Some(instr), metricInterval = 3600L) // timer idle; drain explicitly
     val (lp, _) = d.start()
     try {
@@ -243,7 +243,7 @@ class DaemonSpec extends AnyFunSuite with BeforeAndAfterAll {
     def daemon() = {
       val store = new MetricStore(s"$root/spool", schema)
       new Daemon(Seq(Daemon.Route(store, 120L)), waitTime = 30L,
-        checkpoint = ckpt, nowFn = () => Now, spoolDir = Some(spool))
+        checkpoint = ckpt, spoolDir = spool, nowFn = () => Now)
     }
     val d1 = daemon()
     val (lp1, _) = d1.start()
@@ -253,8 +253,7 @@ class DaemonSpec extends AnyFunSuite with BeforeAndAfterAll {
     val consumed = new java.io.File(spool).listFiles().count(_.getName.endsWith(".txt"))
     assert(consumed == 1, "first batch journaled as one closed spool file")
     // restart against the SAME checkpoint — the file source resumes past
-    // the consumed batch (MemoryStream cannot do this; this is the durable
-    // production path)
+    // the consumed batch
     val d2 = daemon()
     val (lp2, hp2) = d2.start()
     try {
@@ -278,7 +277,7 @@ class DaemonSpec extends AnyFunSuite with BeforeAndAfterAll {
     val store = new MetricStore(s"$root/screate", schema, Some(catalog))
     val instr = new graft.streaming.Instrumentation("rurouni", "testhost", "c")
     val d = new Daemon(Seq(Daemon.Route(store, 120L)), waitTime = 30L,
-      checkpoint = s"$root/screate-ckpt-${System.nanoTime()}", nowFn = () => Now,
+      checkpoint = s"$root/screate-ckpt", spoolDir = s"$root/screate-spool", nowFn = () => Now,
       instr = Some(instr), metricInterval = 3600L)
     val (lp, _) = d.start()
     try {
@@ -309,7 +308,7 @@ class DaemonSpec extends AnyFunSuite with BeforeAndAfterAll {
     val fastStore = new MetricStore(s"$root/multi", fast, Some(catalog))
     val slowStore = new MetricStore(s"$root/multi", slow, Some(catalog))
     val d = new Daemon(Seq(Daemon.Route(fastStore, 120L), Daemon.Route(slowStore, 120L)),
-      waitTime = 30L, checkpoint = s"$root/multi-ckpt-${System.nanoTime()}",
+      waitTime = 30L, checkpoint = s"$root/multi-ckpt", spoolDir = s"$root/multi-spool",
       nowFn = () => Now)
     val (lp, hp) = d.start()
     try {
@@ -342,8 +341,7 @@ class DaemonSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq(Archive(Step, 720), Archive(60, 1440)), 600, 8)
     val store = new MetricStore(s"$root/drip", schema)
     val d = new Daemon(Seq(Daemon.Route(store, 120L)), waitTime = 30L,
-      checkpoint = s"$root/drip-ckpt", nowFn = () => Now,
-      spoolDir = Some(s"$root/drip-journal"), spoolFlushMillis = 250L)
+      checkpoint = s"$root/drip-ckpt", spoolDir = s"$root/drip-journal", nowFn = () => Now)
     val (lp, _) = d.start()
     val nPoints = 60
     val t0 = System.nanoTime()
@@ -363,7 +361,7 @@ class DaemonSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
     } finally sock.close()
     val elapsedMs = (System.nanoTime() - t0) / 1000000L
-    val bound = elapsedMs / 250L + 2
+    val bound = elapsedMs / Daemon.SpoolFlushMillis + 2
     val written = d.spoolFilesWritten.get()
     assert(written <= bound,
       s"$written journal files for $nPoints drip points in ${elapsedMs}ms (bound $bound)")
@@ -391,7 +389,7 @@ class DaemonSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"crash.b 2.0 ${Now - 20}\n".getBytes(StandardCharsets.UTF_8))
     def daemon() = new Daemon(
       Seq(Daemon.Route(new MetricStore(s"$root/crash", schema), 120L)),
-      waitTime = 30L, checkpoint = ckpt, nowFn = () => Now, spoolDir = Some(spool))
+      waitTime = 30L, checkpoint = ckpt, spoolDir = spool, nowFn = () => Now)
     val d1 = daemon()
     val (lp1, hp1) = d1.start()
     try {
@@ -414,12 +412,55 @@ class DaemonSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally d2.stop()
   }
 
+  test("a failed journal write keeps its lines; the writer journals on and stop still flushes") {
+    val schema = StorageSchema("jfail", ".*".r, 1.0, AggMethod.Last,
+      Seq(Archive(Step, 720), Archive(60, 1440)), 600, 8)
+    val store = new MetricStore(s"$root/jfail", schema)
+    val spool = new java.io.File(s"$root/jfail-journal")
+    val d = new Daemon(Seq(Daemon.Route(store, 120L)), waitTime = 30L,
+      checkpoint = s"$root/jfail-ckpt", spoolDir = spool.getPath, nowFn = () => Now)
+    val (lp, _) = d.start()
+    def hotPoints: Set[(String, Double)] =
+      d.hot.hotView().collect().map(r => r.getString(0) -> r.getDouble(2)).toSet
+    def dropJournal(): Unit = {
+      new scala.reflect.io.Directory(spool).deleteRecursively()
+      assert(!spool.exists())
+    }
+    try {
+      send(lp, Seq(s"jf.a 1.0 ${Now - 20}"))
+      drainUntil(d) { hotPoints == Set("jf.a" -> 1.0) }
+      // the journal directory vanishes: every file write fails until it is back
+      dropJournal()
+      val before = d.spoolFilesWritten.get()
+      send(lp, Seq(s"jf.b 2.0 ${Now - 20}", s"jf.c 3.0 ${Now - 30}"))
+      Thread.sleep(3 * Daemon.SpoolFlushMillis) // the writer's cadence tick fails
+      assert(d.spoolFilesWritten.get() == before)
+      spool.mkdirs()
+      // the writer journals again on its own cadence, with no
+      // processAllAvailable to force a drain
+      val deadline = System.currentTimeMillis() + 20 * Daemon.SpoolFlushMillis
+      while (d.spoolFilesWritten.get() == before && System.currentTimeMillis() < deadline)
+        Thread.sleep(50)
+      assert(d.spoolFilesWritten.get() > before, "journal writer stopped after a failed write")
+      // every line sent lands, the ones the failed write held included
+      drainUntil(d) { hotPoints == Set("jf.a" -> 1.0, "jf.b" -> 2.0, "jf.c" -> 3.0) }
+      // a journal that fails during stop() must not cost the shutdown flush
+      dropJournal()
+      send(lp, Seq(s"jf.d 4.0 ${Now - 20}"))
+      Thread.sleep(2 * Daemon.SpoolFlushMillis) // accepted and queued, its write failing
+    } finally d.stop()
+    assert(d.hot.hotView().count() === 0, "hot cache fully drained on stop")
+    val f = store.fetch(None, Now - 60, Now, Now)
+    assert(f.exists { case (_, df) =>
+      Set(1.0, 2.0, 3.0).forall(v => df.where(col("value") === v).count() == 1) })
+  }
+
   test("bindInterface: 0.0.0.0 binds both listeners; loopback clients still reach them") {
     val schema = StorageSchema("bind", ".*".r, 1.0, AggMethod.Last,
       Seq(Archive(Step, 720), Archive(60, 1440)), 600, 8)
     val store = new MetricStore(s"$root/bind", schema)
     val d = new Daemon(Seq(Daemon.Route(store, 120L)), waitTime = 30L,
-      checkpoint = s"$root/bind-ckpt-${System.nanoTime()}", nowFn = () => Now,
+      checkpoint = s"$root/bind-ckpt", spoolDir = s"$root/bind-spool", nowFn = () => Now,
       bindInterface = "0.0.0.0")
     val (lp, hp) = d.start()
     try {
@@ -428,11 +469,10 @@ class DaemonSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally d.stop()
   }
 
-  test("concurrent connections lose no points (MemoryStream enqueue race)") {
-    // 8 sockets bursting simultaneously: before the daemon-side enqueue
-    // lock, concurrent MemoryStream.addData corrupted the shared row
-    // serializer, killed most handler threads on their first flush, and
-    // silently dropped every later line on those sockets
+  test("concurrent connections lose no points (shared pending queue)") {
+    // 8 sockets bursting simultaneously: every handler hands its lines to
+    // the one pending queue while the journal writer drains it, and no line
+    // may be lost between a handler's add and the writer's poll
     val d = mkDaemon("conc")
     val (linePort, _) = d.start()
     try {

@@ -28,7 +28,11 @@ class IngestSpec extends AnyFunSuite with BeforeAndAfterAll {
   def schema(name: String, archives: Seq[Archive]) =
     StorageSchema(name, ".*".r, 1.0, AggMethod.Last, archives, 600, 8)
 
-  test("parseLines: valid lines parse, arrival is the raw pre-floor timestamp") {
+  /** Malformed inputs: the null-`metric` rows the parse marks. */
+  def malformed(rows: org.apache.spark.sql.DataFrame): Long =
+    Ingest.markMixed(rows).where(col("metric").isNull).count()
+
+  test("line protocol: valid lines parse, arrival is the raw pre-floor timestamp") {
     val lines = Seq(
       "sys.cpu.user 0.5 1700000000",
       "  sys.mem.free   123  1700000001.25  ", // fractional ts + padding
@@ -36,16 +40,16 @@ class IngestSpec extends AnyFunSuite with BeforeAndAfterAll {
       "m notanumber 1700000000",                // bad value
       "m 1.0 notatime",                         // bad ts
       "").toDF("line")
-    val got = Ingest.parseLines(lines)
+    val got = Ingest.parseMixed(lines)
       .as[(String, Long, Double, Long)].collect().toSet
     assert(got == Set(
       ("sys.cpu.user", 1700000000L, 0.5, 1700000000L * 1000000000L),
       ("sys.mem.free", 1700000001L, 123.0, 1700000001250000000L)))
   }
 
-  test("malformedCount counts dropped lines (reference logs+drops)") {
+  test("the parse marks each dropped line once (reference logs+drops)") {
     val lines = Seq("a 1 2", "junk", "m x 3", "m 1 y").toDF("line")
-    assert(Ingest.malformedCount(lines) == 3)
+    assert(malformed(lines) == 3)
   }
 
   test("parseMixed routes line-protocol rows and JSON frames through one stream") {
@@ -60,7 +64,7 @@ class IngestSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got == Set(("sys.a", 1700000000L, 1.5),
       ("sys.b", 1700000010L, 2.5), ("sys.c", 1700000020L, 3.5)))
     // malformed on both sides counted: the bad line AND the broken frame
-    assert(Ingest.malformedMixedCount(rows) == 2)
+    assert(malformed(rows) == 2)
   }
 
   test("overflow-class timestamps drop as malformed instead of killing the stream (ANSI)") {
@@ -71,9 +75,9 @@ class IngestSpec extends AnyFunSuite with BeforeAndAfterAll {
       "m 1.0 Infinity",
       "m 1.0 1e300").toDF("line")
     // a plain cast under ANSI mode would throw here; the parse must survive
-    val got = Ingest.parseLines(lines).collect()
+    val got = Ingest.parseMixed(lines).collect()
     assert(got.length == 1 && got.head.getString(0) == "m")
-    assert(Ingest.malformedCount(lines) == 4)
+    assert(malformed(lines) == 4)
   }
 
   // ---- hot cache vs the ts_hot_view oracle query ------------------------
@@ -199,8 +203,8 @@ class IngestSpec extends AnyFunSuite with BeforeAndAfterAll {
     val now = 1700003600L
     val mem = MemoryStream[String]
     val instr = new graft.streaming.Instrumentation(hostname = "e2e", instance = "0")
-    val q = Ingest.start(mem.toDF().withColumnRenamed("value", "line"), hot,
-      s"$root/st-ckpt", () => now, Some(instr))
+    val q = Ingest.startMixedRouted(mem.toDF().withColumnRenamed("value", "line"),
+      Seq((store.schema, hot)), s"$root/st-ckpt", () => now, Some(instr))
     try {
       mem.addData(
         s"m.a 1.5 ${now - 50}",

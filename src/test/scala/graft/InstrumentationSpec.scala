@@ -53,13 +53,15 @@ class InstrumentationSpec extends AnyFunSuite with BeforeAndAfterAll {
       """[{"metric":"m.a","ts":1700000000,"value":1.5},{"metric":"m.b","ts":1700000001.25,"value":2.5}]""",
       """[{"metric":"m.c","ts":1700000002,"value":3.5},{"ts":1,"value":9}]""", // one entry missing metric
       "not json at all",
-      big).toDF("frame")
-    val got = Ingest.parseFrames(frames).as[(String, Long, Double, Long)].collect().toSet
+      big).toDF("line")
+    val got = Ingest.parseMixed(frames).as[(String, Long, Double, Long)].collect().toSet
     assert(got == Set(
       ("m.a", 1700000000L, 1.5, 1700000000000000000L),
       ("m.b", 1700000001L, 2.5, 1700000001250000000L),
       ("m.c", 1700000002L, 3.5, 1700000002000000000L)))
-    assert(Ingest.malformedFrameCount(frames) == 2) // bad json + oversized
+    // "not json at all" (a malformed line to the mixed parse) + oversized
+    // frame, each marked as one null-metric row
+    assert(Ingest.markMixed(frames).where(col("metric").isNull).count() == 2)
   }
 
   test("I/O budget: incremental cascade reads only dirty partitions, not whole levels") {

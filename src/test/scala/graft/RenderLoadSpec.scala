@@ -9,11 +9,11 @@ import org.scalatest.BeforeAndAfterAll
 
 /** Concurrent serving load (round-8 verdict item #3): the reference's real
   * workload is dashboards polling /render while ingest keeps running —
-  * DaemonLoad proved the ingest side, nothing measured serving under
-  * concurrency. Eight concurrent clients replay a dashboard-shaped target
-  * mix (the AcceptanceSpec families: combine/filter/group/summarize/
-  * window/tag targets) against ONE live daemon JVM mid-ingest, three
-  * rounds each.
+  * kbench's ingest_catchup lane measures the ingest side; this spec
+  * measures serving under concurrency. Eight concurrent clients replay a
+  * dashboard-shaped target mix (the AcceptanceSpec families: combine/
+  * filter/group/summarize/window/tag targets) against ONE live daemon JVM
+  * mid-ingest, three rounds each.
   *
   * Asserts under pressure: every render returns 200 with datapoints
   * (no 500s from concurrent Spark actions on the shared session, no
