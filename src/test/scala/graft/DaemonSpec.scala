@@ -412,6 +412,30 @@ class DaemonSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally d2.stop()
   }
 
+  test("journal files are deleted once a later micro-batch commits them; the spool stays flat") {
+    val schema = StorageSchema("jclean", ".*".r, 1.0, AggMethod.Last,
+      Seq(Archive(Step, 720), Archive(60, 1440)), 600, 8)
+    val spool = new java.io.File(s"$root/jclean-journal")
+    val d = new Daemon(Seq(Daemon.Route(new MetricStore(s"$root/jclean", schema), 120L)),
+      waitTime = 30L, checkpoint = s"$root/jclean-ckpt", spoolDir = spool.getPath,
+      nowFn = () => Now)
+    def journalFiles = spool.listFiles().count(_.getName.endsWith(".txt"))
+    val (lp, _) = d.start()
+    try {
+      for (k <- 1 to 3) {
+        send(lp, Seq(s"jc.m $k.0 ${Now - 10 * k}"))
+        drainUntil(d) { d.hot.hotView().count() == k }
+      }
+      assert(d.spoolFilesWritten.get() == 3L)
+      // the file source deletes a batch's files when the next batch
+      // commits it (`cleanSource=delete`), on its own cleaner thread: only
+      // the newest batch's file may remain
+      val deadline = System.currentTimeMillis() + 20000
+      while (journalFiles > 1 && System.currentTimeMillis() < deadline) Thread.sleep(100)
+      assert(journalFiles <= 1, s"$journalFiles journal files left after 3 committed batches")
+    } finally d.stop()
+  }
+
   test("a failed journal write keeps its lines; the writer journals on and stop still flushes") {
     val schema = StorageSchema("jfail", ".*".r, 1.0, AggMethod.Last,
       Seq(Archive(Step, 720), Archive(60, 1440)), 600, 8)

@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.DedupStream
+import graft.streamops.DedupStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll

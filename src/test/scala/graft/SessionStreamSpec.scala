@@ -1,7 +1,7 @@
 package graft
 
-import graft.streaming.SessionStream
-import graft.streaming.SessionStream.{Ev, OpenSession, Session}
+import graft.streamops.SessionStream
+import graft.streamops.SessionStream.{Ev, OpenSession, Session}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Streaming sessionization (flatMapGroupsWithState + EventTimeTimeout):

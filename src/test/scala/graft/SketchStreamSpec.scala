@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.SketchStream
+import graft.streamops.SketchStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
